@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.operators.PersistedTable
+
 /** Scale rehearsal for the composed pipelines (VERDICT r4 item 6): run
   * `Curation.curate` and `TrainingPipeline.run` on an N× salted blowup of
   * an sf dir and report wall time, peak storage-memory in use, and
@@ -1297,22 +1299,10 @@ object ScaleRehearsal {
     def runSeq(tag: String, compactAfter: Int): SeqResult = {
       val fp = s"dl_${tag}_fp"; val sig = s"dl_${tag}_sig"
       // DROP only reaches tables this JVM's catalog knows; a previous
-      // run's warehouse dirs survive and would fail the managed-table
-      // create with LOCATION_ALREADY_EXISTS — remove them too
-      val wh = new java.io.File(spark.conf.get("spark.sql.warehouse.dir")
-        .stripPrefix("file://").stripPrefix("file:"))
-      Seq(fp, sig).foreach { t =>
-        Seq(t, s"${t}__compact", s"${t}__old").foreach { n =>
-          spark.sql(s"DROP TABLE IF EXISTS $n")
-          val dir = new java.io.File(wh, n)
-          if (dir.exists()) {
-            import scala.jdk.CollectionConverters._
-            java.nio.file.Files.walk(dir.toPath).sorted(
-                java.util.Comparator.reverseOrder[java.nio.file.Path]())
-              .iterator().asScala.foreach(p => java.nio.file.Files.delete(p))
-          }
-        }
-      }
+      // run's dirs survive and would fail the managed-table create with
+      // LOCATION_ALREADY_EXISTS — drop them too, swap residue included
+      Seq(fp, sig).flatMap(PersistedTable.names)
+        .foreach(PersistedTable.drop(spark, _))
       var prevFiles = Map.empty[String, Map[Int, Int]]
       def auditAppend(): Unit = Seq(fp, sig).foreach { t =>
         val now = bucketFiles(t)
@@ -1355,17 +1345,17 @@ object ScaleRehearsal {
           compactRows = Some(graft.processes.DeltaCurate.compact(
             acc.get, "doc_id", "text", fp, sig, buckets = buckets))
           // CRASH-WINDOW RECOVERY exercised at scale (verdict r16 #6):
-          // simulate a JVM death between rewriteBucketed's two renames —
-          // the live fp name missing, the old copy under __old, a
-          // fully-written __compact sibling — then compact AGAIN. The
-          // rewrite's recover-at-start must roll BACK to the aside copy
-          // (never forward: tmp may be half-written in the real window)
-          // and redo the rewrite; the row counts must match the clean
-          // compaction exactly (same live corpus), and the post-recovery
-          // file audit must still hold one file per bucket.
-          spark.sql(s"CREATE TABLE ${fp}__compact AS " +
+          // simulate a JVM death between the swap's two renames — the
+          // live fp name missing, the old copy aside, a written sibling —
+          // then compact AGAIN. The rewrite's recover-at-start must roll
+          // BACK to the aside copy (never forward: the sibling may be
+          // half-written in the real window) and redo the rewrite; the
+          // row counts must match the clean compaction exactly (same
+          // live corpus), and the post-recovery file audit must still
+          // hold one file per bucket.
+          spark.sql(s"CREATE TABLE ${PersistedTable.sibling(fp)} AS " +
             s"SELECT * FROM $fp LIMIT 1")
-          spark.sql(s"ALTER TABLE $fp RENAME TO ${fp}__old")
+          spark.sql(s"ALTER TABLE $fp RENAME TO ${PersistedTable.aside(fp)}")
           val recompact = graft.processes.DeltaCurate.compact(
             acc.get, "doc_id", "text", fp, sig, buckets = buckets)
           require(recompact == compactRows.get,

@@ -37,6 +37,27 @@ object Dedup {
       .groupBy(col("fp"))
       .agg(min(col(idCol)).as("keeper_id"), count(lit(1)).as("n_dups"))
 
+  /** The min-`idCol` row per `__fp` value, as ONE `min_by` aggregation
+    * (a groupBy(min) + self-join back to the rows pays a second exchange
+    * and a sort-merge join for the same decision; over a
+    * hash(__fp)-partitioned input this aggregation is exchange-free).
+    * Output columns: `__fp` first, then the input's other columns in
+    * order. Column names are quoted, so dotted names survive.
+    *
+    * Precondition: `idCol` is unique and non-null within `df`. With a
+    * tied minimum id `min_by` keeps ONE arbitrary row of the tie (a
+    * join-back would keep them all), and a group whose ids are all null
+    * emits a row with every field null.
+    */
+  private[graft] def minIdKeepers(df: DataFrame, idCol: String): DataFrame = {
+    def quoted(c: String) = col("`" + c.replace("`", "``") + "`")
+    val others = df.columns.filter(_ != "__fp")
+    df.groupBy(col("__fp"))
+      .agg(min_by(struct(others.map(c => quoted(c).as(c)): _*),
+        quoted(idCol)).as("__s"))
+      .select(col("__fp") +: others.map(c => col("__s").getField(c).as(c)): _*)
+  }
+
   /** Incremental exact dedup against a persisted BUCKETED fingerprint
     * index ([EXT]): the daily-increment shape of a 100 TB pipeline. The
     * historical index is a table bucketed on `fp`, so the anti-join
@@ -46,7 +67,8 @@ object Dedup {
     * bucket layout, keeping every future increment one-sided too.
     *
     * Semantics: the min-id copy of each fingerprint new to the index
-    * survives (exactGroups' keeper rule applied within the increment);
+    * survives (exactGroups' keeper rule applied within the increment;
+    * ids must be unique and non-null — see [[minIdKeepers]]);
     * fingerprints already indexed drop entirely. A missing table
     * bootstraps from this increment. Returns the surviving rows of `df`
     * (materialized before the index append, so the result is stable).
@@ -63,16 +85,8 @@ object Dedup {
     val spark = df.sparkSession
     val withFp = df.withColumn("__fp",
       TextAnalysis.fingerprint(col(textCol)))
-    // in-increment first occurrence: min-id keeper per fingerprint — ONE
-    // min_by aggregation (optimization r17, guide §2.4: the old
-    // groupBy(min) + self-join paid a second exchange and a sort-merge
-    // join over the same rows for the identical decision). Ids are
-    // unique per increment, so the min_by winner IS the old min-id row;
-    // column order matches the old join output (__fp first).
-    val others = withFp.columns.filter(_ != "__fp")
-    val firsts = withFp.groupBy(col("__fp"))
-      .agg(min_by(struct(others.map(col): _*), col(idCol)).as("__s"))
-      .select(col("__fp") +: others.map(c => col("__s." + c).as(c)): _*)
+    // in-increment first occurrence: min-id keeper per fingerprint
+    val firsts = minIdKeepers(withFp, idCol)
     val fresh =
       if (spark.catalog.tableExists(indexTable)) {
         firsts.join(spark.table(indexTable)

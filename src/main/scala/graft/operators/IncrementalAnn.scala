@@ -61,15 +61,12 @@ object IncrementalAnn {
 
   /** Drop an index and its sidecars, tables AND storage dirs — the
     * idempotence preamble every drop-then-rebuild caller needs (the
-    * registered produce rows, the rehearsal leg). One shared helper
-    * (review finding r14): the per-caller copies hand-built
-    * `<warehouse>/<name>` paths, the exact pattern [[dropTableAndDir]]'s
-    * catalog resolution exists to avoid.
+    * registered produce rows, the rehearsal leg).
     */
   def dropIndex(spark: SparkSession, indexTable: String): Unit =
     Seq(indexTable, centroidsTableName(indexTable),
         tombstonesTableName(indexTable))
-      .foreach(dropTableAndDir(spark, _))
+      .foreach(PersistedTable.drop(spark, _))
 
   /** Append `batch` to the index, bootstrapping it (k-means fit + both
     * tables) when absent. Returns the centroids in force, so a caller
@@ -106,7 +103,7 @@ object IncrementalAnn {
     val spark = batch.sparkSession
     graft.plans.GraftFunctions.register(spark)
     val centTable = centroidsTableName(indexTable)
-    // a writer self-heals a crashed rebuild FIRST (the rewriteBucketed
+    // a writer self-heals a crashed rebuild FIRST (the PersistedTable
     // recover-at-start rule): without this, a crash between the two
     // rebuild swaps leaves a live pair of a NEW index with the OLD
     // sidecar, and an append would silently assign against the wrong
@@ -179,35 +176,8 @@ object IncrementalAnn {
       throw new IllegalStateException(
         s"index table $indexTable does not exist — nothing to delete from " +
           "(bootstrap with append() first)")
-    ids.select(col(idCol).cast("long").as("id")).distinct()
-      .coalesce(1)
-      .write.mode("append")
-      .saveAsTable(tombstonesTableName(indexTable))
-  }
-
-  /** The pending-tombstone filter every reader applies: anti-join `df`'s
-    * `id` against the tombstone sidecar when one exists. The sidecar
-    * broadcasts (the index side must never shuffle), so its size is gated
-    * fail-closed — past `maxTombstones` the fix is a [[compact]], which
-    * empties it. Shared by [[query]] and the rebuild sources so the read
-    * and rewrite paths cannot disagree about what is deleted.
-    */
-  private[operators] def notTombstoned(
-      spark: SparkSession,
-      indexTable: String,
-      df: DataFrame,
-      maxTombstones: Long): DataFrame = {
-    val tombTable = tombstonesTableName(indexTable)
-    if (!spark.catalog.tableExists(tombTable)) df
-    else {
-      val tomb = spark.table(tombTable)
-      Similarity.requireBroadcastable(tomb, maxTombstones,
-        s"tombstone sidecar $tombTable (query-time deletes broadcast " +
-          "against the streaming index scan)",
-        "compact() — it applies the tombstones physically and clears them")
-      df.join(broadcast(tomb.select(col("id").as("__del"))),
-        col("id") === col("__del"), "left_anti")
-    }
+    PersistedTable.appendTombstones(ids, idCol,
+      tombstonesTableName(indexTable))
   }
 
   /** Top-k neighbors from the index for every query vector: assign each
@@ -279,11 +249,10 @@ object IncrementalAnn {
     // a READER must not mutate the catalog, but it must also never pair
     // a half-swapped rebuild's new index with the old sidecar (silently
     // wrong probes) — detect the crash residue and fail actionably
-    if (spark.catalog.tableExists(
-        centroidsTableName(indexTable) + RebuildSuffix) ||
-        spark.catalog.tableExists(indexTable + RebuildSuffix))
+    if (Seq(indexTable, centroidsTableName(indexTable)).exists(t =>
+        spark.catalog.tableExists(PersistedTable.sibling(t))))
       throw new IllegalStateException(
-        s"a rebuild of $indexTable crashed mid-swap (__rebuild residue " +
+        s"a rebuild of $indexTable crashed mid-swap (rebuild sibling " +
           "present) — run IncrementalAnn.recover, or rebuild again, " +
           "before querying")
     val centroids = fitted.getOrElse(
@@ -308,8 +277,8 @@ object IncrementalAnn {
     // tombstone set against the streaming scan, so the one-sided property
     // and the bucketed partitioning both survive — the okCells partial
     // below stays exchange-free.
-    val idx = notTombstoned(spark, indexTable, spark.table(indexTable),
-      maxTombstones)
+    val idx = PersistedTable.notTombstoned(spark.table(indexTable), "id",
+      tombstonesTableName(indexTable), maxTombstones, "compact()")
     // cap gate: per-cell DISTINCT-id counts — the streaming ingest is
     // at-least-once, so a crash-window re-append can leave duplicate
     // rows; a RAW count would let those duplicates push a near-cap cell
@@ -371,16 +340,14 @@ object IncrementalAnn {
     * against the frozen quantizer; distribution drift is fixed by a
     * rebuild, never by an append). Returns the new centroids.
     *
-    * Swap protocol (the [[graft.processes.DeltaCurate]] rename-aside rule
-    * extended to a COUPLED table pair): both `__rebuild` siblings are
-    * fully written BEFORE any rename, then the index swaps
-    * (`t → t__old`, `t__rebuild → t`, drop `t__old`), then the sidecar
-    * swaps the same way. The index swap is the COMMIT POINT: a crash
-    * before it rolls the rebuild back (the live pair was never touched),
-    * a crash after it rolls forward (the sidecar sibling provably exists
-    * and is complete, because writes precede every rename). [[recover]]
-    * applies exactly that rule and runs automatically at the start of
-    * every rebuild.
+    * Swap protocol ([[PersistedTable]]'s sibling write + swap, extended
+    * to a COUPLED table pair): both siblings are fully written BEFORE any
+    * swap, then the index swaps, then the sidecar. The index swap is the
+    * COMMIT POINT: a crash before it rolls the rebuild back (the live
+    * pair was never touched), a crash after it rolls forward (the sidecar
+    * sibling provably exists and is complete, because writes precede
+    * every rename). [[recover]] applies exactly that rule and runs
+    * automatically at the start of every rebuild.
     *
     * Readers: rebuild is an OFFLINE op by contract — the quantizer
     * CHANGES, so even a perfectly atomic swap changes query results;
@@ -405,27 +372,25 @@ object IncrementalAnn {
         spark.catalog.tableExists(centTable),
       s"rebuild needs an existing index — bootstrap $indexTable with " +
         "append() first")
-    // a previous crashed rebuild may have left sibling DIRS without
-    // catalog entries (recover() dropped the entries) — clear them so the
-    // managed-table create below cannot die on LOCATION_ALREADY_EXISTS
-    Seq(indexTable, centTable).foreach { t =>
-      dropTableAndDir(spark, t + RebuildSuffix)
-    }
     val centroids = Clustering.kmeansFit(corpus, idCol, vecCol,
       nCells, iters)
     import spark.implicits._
-    centroids.zipWithIndex
-      .map { case (c, i) => (i.toLong, c.toSeq) }.toSeq
-      .toDF("cell", "centroid")
-      .write.mode("overwrite").saveAsTable(centTable + RebuildSuffix)
-    assign(corpus, idCol, vecCol, centroids)
-      .repartition(centroids.length, col("cell"))
-      .write.mode("overwrite")
-      .bucketBy(centroids.length, "cell").sortBy("cell")
-      .saveAsTable(indexTable + RebuildSuffix)
+    PersistedTable.writeSibling(spark, centTable) { name =>
+      centroids.zipWithIndex
+        .map { case (c, i) => (i.toLong, c.toSeq) }.toSeq
+        .toDF("cell", "centroid")
+        .write.mode("overwrite").saveAsTable(name)
+    }
+    PersistedTable.writeSibling(spark, indexTable) { name =>
+      assign(corpus, idCol, vecCol, centroids)
+        .repartition(centroids.length, col("cell"))
+        .write.mode("overwrite")
+        .bucketBy(centroids.length, "cell").sortBy("cell")
+        .saveAsTable(name)
+    }
     // commit point: the index swap; then the sidecar swap
-    swapIn(spark, indexTable)
-    swapIn(spark, centTable)
+    PersistedTable.swapIn(spark, indexTable)
+    PersistedTable.swapIn(spark, centTable)
     // a rebuild rewrites every row under the caller's authoritative
     // corpus, so pending tombstones are consumed by it: leaving them
     // would re-delete ids the new corpus legitimately re-added. Cleared
@@ -434,7 +399,7 @@ object IncrementalAnn {
     // swaps and this drop leaves tombstones naming ids the caller either
     // excluded (anti-join no-op) or re-added (suppressed until the next
     // compact — the conservative direction, same as deleteIds' contract).
-    dropTableAndDir(spark, tombstonesTableName(indexTable))
+    PersistedTable.drop(spark, tombstonesTableName(indexTable))
     centroids
   }
 
@@ -455,9 +420,9 @@ object IncrementalAnn {
       indexTable: String,
       nCells: Int = 8,
       iters: Int = 2): Array[Array[Double]] = {
-    // self-heal BEFORE the eager spark.table() analysis (review finding
-    // r14): a prior rebuild crashed between swapIn's two renames leaves
-    // the live name missing with __old holding the only copy — the
+    // self-heal BEFORE the eager spark.table() analysis: a prior rebuild
+    // crashed between the swap's two renames leaves the live name missing
+    // with the aside copy holding the only one — the
     // designated reconciliation op must recover that state itself, like
     // every other writer entry point, not die on TABLE_NOT_FOUND before
     // rebuild()'s own recover() can run. recover is idempotent; the
@@ -469,12 +434,10 @@ object IncrementalAnn {
     // anyway, so a tombstone set too large to broadcast just shuffles,
     // which is exactly the degraded mode a huge takedown batch deserves.
     // rebuild() clears the sidecar after its commit point.
-    val tombTable = tombstonesTableName(indexTable)
-    val corpus0 = spark.table(indexTable).select(col("id"), col("vec"))
-    val corpus = (if (spark.catalog.tableExists(tombTable))
-        corpus0.join(spark.table(tombTable).select(col("id")),
-          Seq("id"), "left_anti")
-      else corpus0).dropDuplicates("id")
+    val corpus = PersistedTable.withoutTombstones(
+        spark.table(indexTable).select(col("id"), col("vec")), "id",
+        tombstonesTableName(indexTable))
+      .dropDuplicates("id")
     rebuild(corpus, "id", "vec", indexTable, nCells, iters)
   }
 
@@ -504,54 +467,23 @@ object IncrementalAnn {
     * vector by the at-least-once contract (the same row re-appended), so
     * keeping any copy is exact.
     *
-    * Crash windows (the [[rebuild]] machinery, single table): the
-    * `__rebuild` sibling is fully written before the swap; [[recover]]
-    * rolls a pre-swap crash back (index + tombstones untouched — rerun
-    * compact) and a mid-swap crash to the recoverable copy. The
-    * tombstone drop comes AFTER the swap (commit point): a crash between
-    * them leaves tombstones naming ids that no longer exist — an
-    * anti-join no-op, cleared by the next compact. Offline/single-writer
+    * Crash windows: the single-table [[PersistedTable.compact]]
+    * lifecycle, after this index's own [[recover]]. Offline/single-writer
     * like rebuild.
     */
   def compact(spark: SparkSession, indexTable: String,
       fitted: Option[Array[Array[Double]]] = None): Long = {
     recover(spark, indexTable)
-    require(spark.catalog.tableExists(indexTable),
-      s"compact needs an existing index — bootstrap $indexTable with " +
-        "append() first")
     // bucket count always follows the quantizer in force (the append
     // rule); `fitted` is the append/query chaining contract (optimization
     // r16, guide §5 — only the cell count is read, but wrong models here
     // mean a wrong bucket spec, same severity; when in doubt, omit)
     val cells = fitted.getOrElse(
       loadCentroids(spark, centroidsTableName(indexTable))).length
-    // a previous crashed rebuild/compact may have left a sibling DIR
-    // without a catalog entry (recover() dropped the entry)
-    dropTableAndDir(spark, indexTable + RebuildSuffix)
-    val tombTable = tombstonesTableName(indexTable)
-    val scan = spark.table(indexTable)
-    val live =
-      if (spark.catalog.tableExists(tombTable))
-        scan.join(spark.table(tombTable).select(col("id").as("__del")),
-          col("id") === col("__del"), "left_anti")
-      else scan
-    // the audit count rides the rewrite job as an observe metric
-    // (optimization r16, guide §5 — it used to be a second scan of the
-    // just-written table; the rewrite's own row count IS the compacted
-    // table's count). Never statically empty (the observed subtree is
-    // the full rewrite), so the metric always fulfills.
-    val nObs = org.apache.spark.sql.Observation()
-    live
-      .groupBy(col("cell"), col("id"))
-      .agg(first(col("vec")).as("vec"))
-      .observe(nObs, count(lit(1)).as("n"))
-      .repartition(cells, col("cell"))
-      .write.mode("overwrite")
-      .bucketBy(cells, "cell").sortBy("cell")
-      .saveAsTable(indexTable + RebuildSuffix)
-    swapIn(spark, indexTable)
-    dropTableAndDir(spark, tombTable)
-    nObs.get("n").asInstanceOf[Long]
+    PersistedTable.compact(spark, indexTable,
+        tombstonesTableName(indexTable), "id", cells, "cell") {
+      _.groupBy(col("cell"), col("id")).agg(first(col("vec")).as("vec"))
+    }
   }
 
   /** Maintenance decision (verdict r13 #3 — "nothing consumes
@@ -642,122 +574,25 @@ object IncrementalAnn {
 
   /** Complete or abort a rebuild that crashed mid-swap, per the commit
     * rule in [[rebuild]]'s scaladoc:
-    *  - index `__rebuild` sibling still present → the commit point was
-    *    not passed (writes may even be half-done) → ROLL BACK: drop both
-    *    siblings; if the crash split the index swap's two renames
-    *    (live name missing, `__old` present), restore `__old` first.
+    *  - index sibling still present → the commit point was not passed
+    *    (writes may even be half-done) → ROLL BACK: the index's own
+    *    [[PersistedTable.recover]], and drop the sidecar's sibling;
     *  - index sibling consumed but the sidecar's still present → the
     *    commit point WAS passed → ROLL FORWARD: finish the sidecar swap
-    *    (its sibling is provably complete — writes precede renames).
-    *  - stray `__old` copies after both swaps → drop them.
+    *    (its sibling is provably complete — writes precede renames);
+    *  - then each table's own recovery drops stray aside copies.
     * Idempotent; safe to call on a healthy index (no-op). Runs
-    * automatically at the start of [[rebuild]].
+    * automatically at the start of every writer.
     */
   def recover(spark: SparkSession, indexTable: String): Unit = {
     val centTable = centroidsTableName(indexTable)
-    val idxReb = indexTable + RebuildSuffix
-    if (spark.catalog.tableExists(idxReb)) {
-      // pre-commit: roll back. The index swap may have died between its
-      // renames — live name gone, __old holding the only live copy.
-      if (!spark.catalog.tableExists(indexTable) &&
-          spark.catalog.tableExists(indexTable + OldSuffix))
-        spark.sql(s"ALTER TABLE ${indexTable + OldSuffix} " +
-          s"RENAME TO $indexTable")
-      spark.sql(s"DROP TABLE IF EXISTS $idxReb")
-      spark.sql(s"DROP TABLE IF EXISTS ${centTable + RebuildSuffix}")
-    } else if (spark.catalog.tableExists(centTable + RebuildSuffix)) {
-      // post-commit: roll forward the sidecar swap from wherever it died
-      if (spark.catalog.tableExists(centTable) &&
-          !spark.catalog.tableExists(centTable + OldSuffix))
-        spark.sql(s"ALTER TABLE $centTable " +
-          s"RENAME TO ${centTable + OldSuffix}")
-      if (!spark.catalog.tableExists(centTable))
-        spark.sql(s"ALTER TABLE ${centTable + RebuildSuffix} " +
-          s"RENAME TO $centTable")
-    }
-    Seq(indexTable, centTable).foreach { t =>
-      if (spark.catalog.tableExists(t + OldSuffix) &&
-          spark.catalog.tableExists(t))
-        spark.sql(s"DROP TABLE ${t + OldSuffix}")
-    }
-  }
-
-  private[operators] val RebuildSuffix = "__rebuild"
-  private val OldSuffix = "__old"
-
-  /** Single-table form of [[recover]] for ops that swap ONE table (the
-    * compaction rewrites here and in [[IvfPq.compactPersisted]] — no
-    * coupled sidecar, the quantizer/models are read-only): `__rebuild`
-    * residue means the commit point was not passed → roll back (restore
-    * `__old` if the swap's first rename ran, drop the sibling); stray
-    * `__old` next to a live table → drop it. Idempotent, catalog-only on
-    * a healthy table.
-    */
-  private[operators] def recoverTable(spark: SparkSession,
-      table: String): Unit = {
-    if (spark.catalog.tableExists(table + RebuildSuffix)) {
-      if (!spark.catalog.tableExists(table) &&
-          spark.catalog.tableExists(table + OldSuffix))
-        spark.sql(s"ALTER TABLE ${table + OldSuffix} RENAME TO $table")
-      spark.sql(s"DROP TABLE IF EXISTS ${table + RebuildSuffix}")
-    }
-    if (spark.catalog.tableExists(table + OldSuffix)) {
-      if (spark.catalog.tableExists(table))
-        spark.sql(s"DROP TABLE ${table + OldSuffix}")
-      else
-        // not a window swapIn can produce, but the restore is always safe
-        spark.sql(s"ALTER TABLE ${table + OldSuffix} RENAME TO $table")
-    }
-  }
-
-  /** `t → t__old`, `t__rebuild → t`, drop `t__old` — at every instant a
-    * complete copy exists under a recoverable name (the rename-aside
-    * rule; [[recover]] handles every crash window).
-    */
-  private[operators] def swapIn(spark: SparkSession, table: String): Unit = {
-    spark.sql(s"ALTER TABLE $table RENAME TO ${table + OldSuffix}")
-    spark.sql(s"ALTER TABLE ${table + RebuildSuffix} RENAME TO $table")
-    spark.sql(s"DROP TABLE ${table + OldSuffix}")
-  }
-
-  /** Drop a table AND its storage dir (a previous crash can leave the dir
-    * behind with no catalog entry, poisoning the next managed-table create
-    * with LOCATION_ALREADY_EXISTS).
-    *
-    * The dir is resolved from the CATALOG, not reconstructed as
-    * `<warehouse>/<name>` (ADVICE r13): a database-qualified `db.tbl`
-    * lives under `db.db/tbl` and a custom warehouse layout anywhere — a
-    * hand-built path silently misses both, leaving the self-heal inert
-    * against the exact failure it exists to prevent. While the entry
-    * exists its real `location` is read from the metadata (captured
-    * BEFORE the drop); for the entry-less leftover-dir case the catalog's
-    * own `defaultTablePath` computes the would-be managed location,
-    * honoring the database's directory.
-    *
-    * EXTERNAL tables are dropped catalog-only — their data is not ours to
-    * delete (review finding: since [[graft.operators.IvfPq.dropPersisted]]
-    * shares this helper, a user-supplied name could be an external table
-    * over shared data; recursively deleting its location would destroy it
-    * where `DROP TABLE` correctly leaves it). Managed tables and
-    * entry-less leftover dirs keep the full table+dir cleanup.
-    */
-  private[operators] def dropTableAndDir(spark: SparkSession, table: String): Unit = {
-    val catalog = spark.sessionState.catalog
-    val parsed = spark.sessionState.sqlParser.parseTableIdentifier(table)
-    val ident = parsed.copy(database =
-      parsed.database.orElse(Some(catalog.getCurrentDatabase)))
-    val meta =
-      if (catalog.tableExists(ident)) Some(catalog.getTableMetadata(ident))
-      else None
-    val external = meta.exists(_.tableType ==
-      org.apache.spark.sql.catalyst.catalog.CatalogTableType.EXTERNAL)
-    val loc = new org.apache.hadoop.fs.Path(
-      meta.map(_.location).getOrElse(catalog.defaultTablePath(ident)))
-    spark.sql(s"DROP TABLE IF EXISTS $table")
-    if (!external) {
-      val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(loc)) { fs.delete(loc, true); () }
-    }
+    if (spark.catalog.tableExists(PersistedTable.sibling(indexTable)))
+      PersistedTable.drop(spark, PersistedTable.sibling(centTable))
+    else if (spark.catalog.tableExists(PersistedTable.sibling(centTable)))
+      PersistedTable.swapIn(spark, centTable)
+    PersistedTable.recover(spark, indexTable)
+    PersistedTable.recover(spark, centTable)
+    ()
   }
 
   /** Quantizer staleness report — the "when to rebuild" signal. PSI
@@ -862,11 +697,11 @@ object IncrementalAnn {
     // query's explicit pre-check): a reader that consumed the OLD
     // sidecar next to a NEW index would be silently wrong — centroids(),
     // quantizerDrift, and the streaming ingest all arrive here
-    if (spark.catalog.tableExists(centTable + RebuildSuffix))
+    if (spark.catalog.tableExists(PersistedTable.sibling(centTable)))
       throw new IllegalStateException(
-        s"a rebuild around $centTable crashed mid-swap (__rebuild " +
-          "residue present) — run IncrementalAnn.recover, or rebuild " +
-          "again, before reading the quantizer")
+        s"a rebuild around $centTable crashed mid-swap (rebuild sibling " +
+          "present) — run IncrementalAnn.recover, or rebuild again, " +
+          "before reading the quantizer")
     if (!spark.catalog.tableExists(centTable))
       throw new IllegalStateException(
         s"centroid sidecar $centTable does not exist — bootstrap the " +

@@ -231,14 +231,13 @@ object IvfPq {
     indexTable + "__tombstones"
 
   /** Drop a persisted compound index and its sidecars, tables AND
-    * storage dirs (the [[IncrementalAnn.dropIndex]] catalog-resolved
-    * preamble, shared — not a fourth hand-built-path copy).
+    * storage dirs (the [[IncrementalAnn.dropIndex]] preamble).
     */
   def dropPersisted(spark: org.apache.spark.sql.SparkSession,
       indexTable: String): Unit =
     Seq(indexTable, modelsTableName(indexTable),
         tombstonesTableName(indexTable))
-      .foreach(IncrementalAnn.dropTableAndDir(spark, _))
+      .foreach(PersistedTable.drop(spark, _))
 
   /** Persist the compound index: the (id, cell, codes) table bucketed by
     * `cell` (`coarse.length` buckets — one inverted list per bucket, the
@@ -286,15 +285,14 @@ object IvfPq {
       indexTable: String): Unit = {
     val spark = df.sparkSession
     val cells = coarse.length
-    // clear a crashed compactPersisted's __rebuild/__old residue first —
-    // this writer rewrites the index anyway, so rolling the swap back is
+    // clear a crashed compactPersisted's swap residue first — this
+    // writer rewrites the index anyway, so rolling the swap back is
     // always the right repair here
-    IncrementalAnn.recoverTable(spark, indexTable)
-    IncrementalAnn.dropTableAndDir(spark, modelsTableName(indexTable))
+    val live = PersistedTable.recover(spark, indexTable)
+    PersistedTable.drop(spark, modelsTableName(indexTable))
     // writer self-heal: a crashed prior overwrite can leave the index dir
     // with no catalog entry; clear it so this (managed) create succeeds
-    if (!spark.catalog.tableExists(indexTable))
-      IncrementalAnn.dropTableAndDir(spark, indexTable)
+    if (!live) PersistedTable.drop(spark, indexTable)
     index(df, idCol, vecCol, coarse, codebooks)
       // one file per bucket: repartition(n, cell) is the same
       // murmur3-pmod mapping as the bucket id (the IncrementalAnn rule)
@@ -313,7 +311,7 @@ object IvfPq {
     // point; a crash in between leaves tombstones naming ids the caller
     // either excluded (anti-join no-op) or re-added (suppressed until the
     // next compact, deleteIds' conservative contract)
-    IncrementalAnn.dropTableAndDir(spark, tombstonesTableName(indexTable))
+    PersistedTable.drop(spark, tombstonesTableName(indexTable))
   }
 
   /** ADC top-k against a PERSISTED compound index — the 100 TB read path:
@@ -366,25 +364,14 @@ object IvfPq {
     // pending tombstones anti-join AFTER the bucket prune (fewer rows to
     // filter) and BEFORE the ADC join — a deleted id must not occupy a
     // top-k slot. The gated tombstone set broadcasts against the pruned
-    // scan (the IncrementalAnn.notTombstoned shape), so the no-shuffle
-    // property of the index side survives.
+    // scan, so the no-shuffle property of the index side survives.
     val pruned = spark.table(indexTable)
       .filter(col("cell").isin(probedCells: _*))
       .select(col(idCol).as("n_id"), col("cell"),
         col("codes").as("__codes"))
-    val tombTable = tombstonesTableName(indexTable)
-    val alive =
-      if (spark.catalog.tableExists(tombTable)) {
-        val tomb = spark.table(tombTable)
-        Similarity.requireBroadcastable(tomb, maxTombstones,
-          s"tombstone sidecar $tombTable (query-time deletes broadcast " +
-            "against the pruned index scan)",
-          "compactPersisted() — it applies the tombstones physically " +
-            "and clears them")
-        pruned.join(broadcast(tomb.select(col("id").as("__del"))),
-          col("n_id") === col("__del"), "left_anti")
-      } else pruned
-    val idx = Similarity.spreadIfNarrow(alive)
+    val idx = Similarity.spreadIfNarrow(PersistedTable.notTombstoned(
+      pruned, "n_id", tombstonesTableName(indexTable), maxTombstones,
+      "compactPersisted()"))
     adcTopK(probes, idx, codebooks.length, k)
   }
 
@@ -609,16 +596,12 @@ object IvfPq {
       ids: DataFrame,
       idCol: String,
       indexTable: String): Unit = {
-    val spark = ids.sparkSession
-    IncrementalAnn.recoverTable(spark, indexTable)
-    if (!spark.catalog.tableExists(indexTable))
+    if (!PersistedTable.recover(ids.sparkSession, indexTable))
       throw new IllegalStateException(
         s"index table $indexTable does not exist — nothing to delete " +
           "from (persistIndex first)")
-    ids.select(col(idCol).cast("long").as("id")).distinct()
-      .coalesce(1)
-      .write.mode("append")
-      .saveAsTable(tombstonesTableName(indexTable))
+    PersistedTable.appendTombstones(ids, idCol,
+      tombstonesTableName(indexTable))
   }
 
   /** Physical delete + GC for the persisted compound index
@@ -640,19 +623,16 @@ object IvfPq {
     * (broadcasts when the tombstone set is small, shuffles gracefully on
     * a huge takedown batch) → per-(cell, id) keeper (exchange-free on
     * the bucketed layout: cell ⊆ the grouping keys) → bucketed write of
-    * the SAME spec, one file per bucket. Crash windows: the single-table
-    * rename-aside swap ([[IncrementalAnn.recoverTable]] rolls back, every
-    * writer entry point runs it); a reader meanwhile sees either the old
-    * complete pair (tombstones still filtering — identical answers) or
-    * the new one. Tombstones drop after the swap; the in-between crash
-    * leaves no-op tombstones the next compact clears.
+    * the SAME spec, one file per bucket. Crash windows: the
+    * [[PersistedTable.compact]] lifecycle; a reader meanwhile sees either
+    * the old complete pair (tombstones still filtering — identical
+    * answers) or the new one.
     */
   def compactPersisted(spark: org.apache.spark.sql.SparkSession,
       indexTable: String,
       fitted: Option[(Array[Array[Double]], Array[Array[Array[Double]]])] =
         None): Long = {
-    IncrementalAnn.recoverTable(spark, indexTable)
-    require(spark.catalog.tableExists(indexTable),
+    require(PersistedTable.recover(spark, indexTable),
       s"compactPersisted needs an existing index $indexTable — " +
         "persistIndex first")
     // bucket count follows the models in force (sidecar read-only here);
@@ -660,37 +640,15 @@ object IvfPq {
     // queryPersisted chaining contract (the bucket count is all that is
     // read; wrong models here mean a wrong bucket spec, same severity).
     val (coarse, _) = fitted.getOrElse(loadModels(spark, indexTable))
-    val cells = coarse.length
-    val reb = indexTable + IncrementalAnn.RebuildSuffix
-    IncrementalAnn.dropTableAndDir(spark, reb)
-    val tombTable = tombstonesTableName(indexTable)
-    val scan = spark.table(indexTable)
     // the id column keeps its caller-given name through persist/append
     // (the codesKeeping schema: id first, then cell, then codes)
-    val idCol = scan.columns.head
-    val live =
-      if (spark.catalog.tableExists(tombTable))
-        scan.join(spark.table(tombTable).select(col("id").as("__del")),
-          col(idCol) === col("__del"), "left_anti")
-      else scan
-    // the audit count rides the rewrite job as an observe metric
-    // (optimization r16, guide §5 — it used to be a second full scan of
-    // the just-written table; the rewrite's own row count IS the
-    // compacted table's count). Never statically empty (the observed
-    // subtree is the full rewrite), so the metric always fulfills.
-    val nObs = org.apache.spark.sql.Observation()
-    live
-      .groupBy(col("cell"), col(idCol))
-      .agg(first(col("codes")).as("codes"))
-      .select(col(idCol), col("cell"), col("codes"))
-      .observe(nObs, count(lit(1)).as("n"))
-      .repartition(cells, col("cell"))
-      .write.mode("overwrite")
-      .bucketBy(cells, "cell").sortBy("cell")
-      .saveAsTable(reb)
-    IncrementalAnn.swapIn(spark, indexTable)
-    IncrementalAnn.dropTableAndDir(spark, tombTable)
-    nObs.get("n").asInstanceOf[Long]
+    val idCol = spark.table(indexTable).columns.head
+    PersistedTable.compact(spark, indexTable,
+        tombstonesTableName(indexTable), idCol, coarse.length, "cell") {
+      _.groupBy(col("cell"), col(idCol))
+        .agg(first(col("codes")).as("codes"))
+        .select(col(idCol), col("cell"), col("codes"))
+    }
   }
 
   /** Quantization-staleness report for the CODE space (verdict r14 #1's

@@ -3,7 +3,8 @@ package graft.processes
 import org.apache.spark.sql.{DataFrame, Observation}
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Curation, Dedup, SnapshotDiff, TextAnalysis}
+import graft.operators.{Curation, Dedup, PersistedTable, SnapshotDiff,
+  TextAnalysis}
 
 /** Incremental snapshot curation ([EXT]) — the monthly-delta shape: when a
   * new corpus snapshot lands, do NOT re-curate the world; diff it against
@@ -222,7 +223,7 @@ object DeltaCurate {
     val checkpointed =
       try {
         if (bootstrapFused)
-          keeperRows(sketched, idCol)
+          Dedup.minIdKeepers(sketched, idCol)
             .withColumn("__nd", lit(null).cast("boolean"))
             .localCheckpoint()
         else sketched.localCheckpoint()
@@ -240,7 +241,7 @@ object DeltaCurate {
     // sort over the same rows for the identical decision), exchange-free
     // over the hash(__fp) checkpoint blocks. Ids are unique per
     // increment, so the min_by winner is exactly the old min-id row.
-    val firsts = keeperRows(base, idCol)
+    val firsts = Dedup.minIdKeepers(base, idCol)
     // one-sided anti-join: the bucketed index scan satisfies the join's
     // distribution, only the (small) delta side shuffles. exactFresh
     // lands twice in the flagged-checkpoint action (the flagged left
@@ -332,26 +333,18 @@ object DeltaCurate {
     // real scale. Write parallelism becomes `buckets` — which is already
     // the index's scale knob (more data ⇒ more buckets).
     val survivors = flagged.filter(col("__nd").isNull)
-    val ec = scala.concurrent.ExecutionContext.global
-    val fpWrite = scala.concurrent.Future {
+    graft.Concurrent.both(
       flagged.select(col("__fp").as("fp"))
         .repartition(buckets, col("fp"))
         .write.mode(if (fpExists) "append" else "overwrite")
         .bucketBy(buckets, "fp").sortBy("fp")
-        .saveAsTable(fpIndexTable)
-    }(ec)
-    val sigWrite = scala.concurrent.Future {
+        .saveAsTable(fpIndexTable),
       survivors.select(explode(col("__bk")).as("key"), col(idCol).as("id"),
           col("__sig").as("sig"))
         .repartition(buckets, col("key"))
         .write.mode(if (sigExists) "append" else "overwrite")
         .bucketBy(buckets, "key").sortBy("key")
-        .saveAsTable(sigIndexTable)
-    }(ec)
-    scala.concurrent.Await.result(fpWrite,
-      scala.concurrent.duration.Duration.Inf)
-    scala.concurrent.Await.result(sigWrite,
-      scala.concurrent.duration.Duration.Inf)
+        .saveAsTable(sigIndexTable))
     // the checkpoints above have run, so the observation results are in.
     // A MISSING key (empty metric map) means the CollectMetrics nodes
     // were optimized out of the executed plan anyway — seen when a
@@ -375,22 +368,6 @@ object DeltaCurate {
       removed = metric(sm, "removed"),
       gated = metric(gatedObs.get, "n"),
       survivors = survivors.drop("__fp", "__sig", "__bk", "__nd"))
-  }
-
-  /** The in-increment exact keeper — the min-`idCol` row per `__fp` — as
-    * ONE `min_by` aggregation (optimization r17, guide §2.4). The previous
-    * form (groupBy(min) + self-join back to the rows) paid a second
-    * exchange and a sort-merge join for the identical decision; over a
-    * hash(__fp)-partitioned checkpoint this aggregation is exchange-free.
-    * Column order matches the old join output (`__fp` first, then the
-    * input's other columns). Ids are unique per increment (the snapshot
-    * contract), so the winner is exactly the old min-id row.
-    */
-  private def keeperRows(base: DataFrame, idCol: String): DataFrame = {
-    val others = base.columns.filter(_ != "__fp")
-    base.groupBy(col("__fp"))
-      .agg(min_by(struct(others.map(col): _*), col(idCol)).as("__s"))
-      .select(col("__fp") +: others.map(c => col("__s." + c).as(c)): _*)
   }
 
   /** In-memory index frames equivalent to what a BOOTSTRAP increment of
@@ -463,7 +440,7 @@ object DeltaCurate {
     // keep semi-joins are exchange-free on the fp side over these
     // blocks). Strictly fewer rows than base —
     // increment-proportional at 100 TB.
-    val firsts = keeperRows(
+    val firsts = Dedup.minIdKeepers(
         Dedup.withMd5Sketch(
             {
               val fp = gated.withColumn("__fp",
@@ -563,7 +540,7 @@ object DeltaCurate {
         },
         textCol, k, bands)
       .localCheckpoint()
-    val firsts = keeperRows(base, idCol)
+    val firsts = Dedup.minIdKeepers(base, idCol)
     val exactFresh = fpIndex match {
       case Some(fi) =>
         firsts.join(fi.select(col("fp").as("__fp")), Seq("__fp"), "left_anti")
@@ -621,12 +598,13 @@ object DeltaCurate {
     * Scale shape: one narrow pass recomputes live fingerprints and
     * banded signatures (same kernels as [[run]]), then each index
     * rewrites via a semi-join that the bucketed scan keeps one-sided,
-    * into a fresh table with the SAME bucket spec, swapped in by
-    * drop+rename — so every future increment keeps its one-sided-join
-    * property. The signature semi-join matches the FULL row (key, id,
-    * sig): a band of a superseded version that coincidentally equals the
-    * current version's band key still carries the superseded signature
-    * and must go.
+    * under the SAME bucket spec
+    * ([[graft.operators.PersistedTable.rewrite]]) — so every future
+    * increment keeps its one-sided-join property. The signature
+    * semi-join matches the FULL row (key, id, sig): a band of a
+    * superseded version that coincidentally equals the current
+    * version's band key still carries the superseded signature and
+    * must go.
     *
     * Returns (fp rows, sig rows) after compaction.
     */
@@ -642,10 +620,10 @@ object DeltaCurate {
     require(k % bands == 0, s"k=$k must divide into bands=$bands")
     val spark = corpus.sparkSession
     val live = liveRows(corpus, idCol, textCol, k, bands)
-    val fpRows = rewriteBucketed(spark, fpIndexTable, buckets, "fp")(
+    val fpRows = PersistedTable.rewrite(spark, fpIndexTable, buckets, "fp")(
       keepFp(live))
-    val sigRows = rewriteBucketed(spark, sigIndexTable, buckets, "key")(
-      keepSig(live, idCol))
+    val sigRows = PersistedTable.rewrite(spark, sigIndexTable, buckets,
+      "key")(keepSig(live, idCol))
     (fpRows, sigRows)
   }
 
@@ -732,72 +710,4 @@ object DeltaCurate {
       live.select(explode(col("__bk")).as("key"), col(idCol).as("id"),
         col("__sig").as("sig")),
       Seq("key", "id", "sig"), "left_semi")
-
-  /** Rewrite a bucketed index table through `keep`, preserving the bucket
-    * spec (write to a sibling, then a rename-aside swap — saveAsTable
-    * cannot overwrite a table its own plan reads). The swap never drops
-    * the live table first: `table` → `table__old`, `table__compact` →
-    * `table`, then drop `table__old` — so at every instant either the old
-    * or the new index exists under a recoverable name, and a crash
-    * mid-swap loses nothing (restart finds either the live table or
-    * `table__old` to rename back).
-    */
-  private def rewriteBucketed(
-      spark: org.apache.spark.sql.SparkSession,
-      table: String,
-      buckets: Int,
-      bucketCol: String)(keep: DataFrame => DataFrame): Long = {
-    val tmp = table + "__compact"
-    val aside = table + "__old"
-    // Crash recovery BEFORE any cleanup (round-9 review finding: dropping
-    // tmp/aside first would destroy BOTH recoverable copies if a previous
-    // swap died between its two renames — the live name missing and the
-    // only index copies sitting under __old/__compact). Roll BACK to the
-    // aside copy (always safe: tmp may be half-written if the crash was
-    // mid-save, so rolling forward is not) and redo the rewrite.
-    if (!spark.catalog.tableExists(table)) {
-      require(spark.catalog.tableExists(aside),
-        s"$table does not exist and no $aside copy to recover from")
-      spark.sql(s"ALTER TABLE $aside RENAME TO $table")
-    }
-    spark.sql(s"DROP TABLE IF EXISTS $tmp")
-    spark.sql(s"DROP TABLE IF EXISTS $aside")
-    // The rewrite is a ZERO-shuffle pass when the old table's bucketed
-    // layout is honored: the scan's HashPartitioning(bucketCol, buckets)
-    // is exactly the writer's bucket-id mapping, so the planner elides
-    // the repartition below as redundant and task i holds precisely
-    // bucket i — one output file per bucket, no exchange. But with the
-    // default autoBucketedScan the planner then DISABLES the bucketed
-    // scan (nothing left in this query requires its partitioning — the
-    // write is a separate execution), leaving the elided repartition
-    // pointing at an arbitrarily-coalesced scan: tasks hold mixed
-    // buckets and every bucket fragments into multiple files (caught by
-    // the DeltaCurateSpec file audit). Pinning the bucketed scan for the
-    // one write keeps both halves consistent. Session-global conf,
-    // restored in finally — same single-writer contract as `run`'s AQE
-    // exclusion (see run's scaladoc).
-    val autoKey = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
-    val prevAuto = spark.conf.getOption(autoKey)
-    spark.conf.set(autoKey, "false")
-    try {
-      keep(spark.table(table))
-        // one file per bucket (same murmur3-pmod mapping as the bucket
-        // id; see the append sites) — elided against the pinned bucketed
-        // scan, a real exchange only if `keep` broke the partitioning
-        .repartition(buckets, col(bucketCol))
-        .write.mode("overwrite")
-        .bucketBy(buckets, bucketCol).sortBy(bucketCol)
-        .saveAsTable(tmp)
-    } finally {
-      prevAuto match {
-        case Some(v) => spark.conf.set(autoKey, v)
-        case None => spark.conf.unset(autoKey)
-      }
-    }
-    val n = spark.table(tmp).count()
-    spark.sql(s"ALTER TABLE $table RENAME TO $aside")
-    spark.sql(s"ALTER TABLE $tmp RENAME TO $table")
-    spark.sql(s"DROP TABLE $aside")
-    n
-  }
 }

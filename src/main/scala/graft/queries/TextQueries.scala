@@ -142,14 +142,9 @@ object TextQueries {
     // per-invocation: dropped and rebuilt each call.)
     "q_incremental_dedup" -> ((s, dir) => {
       val docs = t(s, dir, "documents").filter(col("text").isNotNull)
-      s.sql("DROP TABLE IF EXISTS inc_fp_idx")
       // the in-memory catalog forgets tables across JVMs but the managed
-      // LOCATION survives in the warehouse dir and blocks re-creation —
-      // remove it physically too
-      val loc = new org.apache.hadoop.fs.Path(
-        s.conf.get("spark.sql.warehouse.dir"), "inc_fp_idx")
-      val fs = loc.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(loc)) fs.delete(loc, true)
+      // LOCATION survives and blocks re-creation — drop the dir too
+      graft.operators.PersistedTable.drop(s, "inc_fp_idx")
       graft.operators.Dedup.incrementalExact(
         docs.filter(col("doc_id") < 250), "text", "doc_id",
         "inc_fp_idx", buckets = 8)
@@ -1097,11 +1092,7 @@ object TextQueries {
     // per-invocation: dropped and rebuilt each call.)
     "q_incr_neardup" -> ((s, dir) => {
       val docs = t(s, dir, "documents").filter(col("text").isNotNull)
-      s.sql("DROP TABLE IF EXISTS inc_nd_idx")
-      val loc = new org.apache.hadoop.fs.Path(
-        s.conf.get("spark.sql.warehouse.dir"), "inc_nd_idx")
-      val fs = loc.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(loc)) fs.delete(loc, true)
+      graft.operators.PersistedTable.drop(s, "inc_nd_idx")
       graft.operators.Dedup.incrementalNearDupMd5(
         docs, "text", "doc_id", "inc_nd_idx", buckets = 8)
       val batch = docs.select(
@@ -1243,13 +1234,8 @@ object TextQueries {
     "q_delta_index_write" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
         .select(col("doc_id"), col("text"), col("lang"))
-      for (tb <- Seq("diw_fp", "diw_sig")) {
-        s.sql(s"DROP TABLE IF EXISTS $tb")
-        val loc = new org.apache.hadoop.fs.Path(
-          s.conf.get("spark.sql.warehouse.dir"), tb)
-        val fs = loc.getFileSystem(s.sparkContext.hadoopConfiguration)
-        if (fs.exists(loc)) fs.delete(loc, true)
-      }
+      Seq("diw_fp", "diw_sig")
+        .foreach(graft.operators.PersistedTable.drop(s, _))
       val next = deltaNextSnapshot(docs)
       val cfg = graft.operators.Curation.Config(
         minTokens = 30, maxStopRatio = 1.0, langs = Seq("en"))
@@ -1315,13 +1301,8 @@ object TextQueries {
     "q_delta_index_bootstrap" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
         .select(col("doc_id"), col("text"), col("lang"))
-      for (tb <- Seq("dib_fp", "dib_sig")) {
-        s.sql(s"DROP TABLE IF EXISTS $tb")
-        val loc = new org.apache.hadoop.fs.Path(
-          s.conf.get("spark.sql.warehouse.dir"), tb)
-        val fs = loc.getFileSystem(s.sparkContext.hadoopConfiguration)
-        if (fs.exists(loc)) fs.delete(loc, true)
-      }
+      Seq("dib_fp", "dib_sig")
+        .foreach(graft.operators.PersistedTable.drop(s, _))
       val cfg = graft.operators.Curation.Config(
         minTokens = 30, maxStopRatio = 1.0, langs = Seq("en"))
       graft.processes.DeltaCurate.run(docs.limit(0), docs,

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.processes.DeltaCurate
-import graft.operators.Curation
+import graft.operators.{Curation, PersistedTable}
 
 /** Delta curation e2e: two monthly increments against persisted indexes —
   * only the delta is processed, history-duplicate documents drop, and the
@@ -451,19 +451,20 @@ class DeltaCurateSpec extends SparkSpec {
     val (fp0, sig0) = DeltaCurate.compact(corpus, "doc_id", "text",
       "dc_fp", "dc_sig", buckets = 4)
     // simulate the worst crash window of a LATER compact: the live name
-    // is gone, the only copies sit under __old (complete) and __compact
-    // (possibly half-written — here stale garbage). Pre-fix, rerunning
-    // compact dropped BOTH and then failed on the missing live table.
-    spark.sql("ALTER TABLE dc_fp RENAME TO dc_fp__old")
+    // is gone, the only copies sit aside (complete) and under the sibling
+    // name (possibly half-written — here stale garbage). Pre-fix,
+    // rerunning compact dropped BOTH and then failed on the missing live
+    // table.
+    spark.sql(s"ALTER TABLE dc_fp RENAME TO ${PersistedTable.aside("dc_fp")}")
     Seq((999L, "junk")).toDF("fp", "x").write
-      .bucketBy(4, "fp").saveAsTable("dc_fp__compact")
+      .bucketBy(4, "fp").saveAsTable(PersistedTable.sibling("dc_fp"))
     val (fp1, sig1) = DeltaCurate.compact(corpus, "doc_id", "text",
       "dc_fp", "dc_sig", buckets = 4)
     // the recovered rewrite reproduces the exact pre-crash result
     assert(fp1 === fp0 && sig1 === sig0)
     assert(spark.table("dc_fp").count() === fp0)
-    assert(!spark.catalog.tableExists("dc_fp__old"))
-    assert(!spark.catalog.tableExists("dc_fp__compact"))
+    assert(!spark.catalog.tableExists(PersistedTable.aside("dc_fp")))
+    assert(!spark.catalog.tableExists(PersistedTable.sibling("dc_fp")))
     // and with NEITHER copy present the failure is actionable, not a drop
     spark.sql("DROP TABLE dc_fp")
     val e = intercept[IllegalArgumentException] {
@@ -471,7 +472,41 @@ class DeltaCurateSpec extends SparkSpec {
         buckets = 4)
     }
     assert(e.getMessage.contains("recover"))
-    dropTable("dc_fp__old"); dropTable("dc_fp__compact")
+    PersistedTable.names("dc_fp").foreach(dropTable)
+    cleanTables()
+  }
+
+  test("compact self-heals an entry-less sibling dir left by a crash " +
+    "mid-write (no LOCATION_ALREADY_EXISTS); an empty corpus compacts " +
+    "both indexes to zero rows") {
+    cleanTables()
+    val m0 = (1 to 6).map(i => (i.toLong, doc(i), "en"))
+      .toDF("doc_id", "text", "lang")
+    DeltaCurate.run(m0.limit(0), m0, "doc_id", "text", "lang", cfg,
+      "dc_fp", "dc_sig", buckets = 4)
+    val corpus = m0.filter(col("doc_id") <= 4)
+    val clean = DeltaCurate.compact(corpus, "doc_id", "text",
+      "dc_fp", "dc_sig", buckets = 4)
+    // a JVM that died inside the sibling's saveAsTable leaves its dir
+    // behind with no catalog entry
+    for (t <- Seq("dc_fp", "dc_sig")) {
+      val dir = java.nio.file.Paths.get(
+        spark.sessionState.catalog.defaultTablePath(
+          org.apache.spark.sql.catalyst.TableIdentifier(
+            PersistedTable.sibling(t))))
+      java.nio.file.Files.createDirectories(dir)
+      java.nio.file.Files.write(dir.resolve("part-00000.parquet"),
+        "half-written".getBytes("UTF-8"))
+      assert(!spark.catalog.tableExists(PersistedTable.sibling(t)))
+    }
+    assert(DeltaCurate.compact(corpus, "doc_id", "text", "dc_fp", "dc_sig",
+      buckets = 4) === clean)
+    assert(spark.table("dc_fp").count() === clean._1)
+    assert(spark.table("dc_sig").count() === clean._2)
+    // the rewrite's observed row count holds on an empty rewrite too
+    assert(DeltaCurate.compact(m0.limit(0), "doc_id", "text", "dc_fp",
+      "dc_sig", buckets = 4) === ((0L, 0L)))
+    assert(spark.table("dc_fp").count() === 0L)
     cleanTables()
   }
 

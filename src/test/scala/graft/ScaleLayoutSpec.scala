@@ -63,6 +63,15 @@ class ScaleLayoutSpec extends SparkSpec {
       val out3 = Dedup.incrementalExact(b3, "text", "doc_id",
         "inc_fp_test", buckets = 4)
       assert(out3.select("doc_id").as[Long].collect().toSeq === Seq(21L))
+      // a dotted column name survives the min-id keeper (quoted struct
+      // build, getField read-back — not a nested-field path)
+      val b4 = Seq((30L, "epsilon text", "a"), (31L, "Epsilon  text", "b"))
+        .toDF("doc_id", "text", "meta.src")
+      val out4 = Dedup.incrementalExact(b4, "text", "doc_id",
+        "inc_fp_test", buckets = 4)
+      assert(out4.columns.toSeq === Seq("doc_id", "text", "meta.src"))
+      assert(out4.collect().map(r => (r.getLong(0), r.getString(2))).toSeq ===
+        Seq((30L, "a")))
 
       // LAYOUT: the anti-join against the bucketed index shuffles ONLY
       // the increment side — exactly one hash exchange in the plan, and
