@@ -1,16 +1,7 @@
 package graft
 import org.apache.spark.sql.SparkSession
 object Bench {
-  // Host probes live in graft.HostLoad (shared with ScaleRehearsal since
-  // round 13 — ADVICE r12 asked the skew leg's gates to carry the same
-  // contention evidence); these thin aliases keep Bench's call sites
-  // unchanged.
-  private def loadavg(): Double = HostLoad.loadavg()
-  private def cpuJiffies(): (Long, Long) = HostLoad.cpuJiffies()
-  private def externalCores(before: (Long, Long), after: (Long, Long),
-                            wallSec: Double): Double =
-    HostLoad.externalCores(before, after, wallSec)
-  private def hostSpeedMops(): Double = HostLoad.hostSpeedMops()
+  import HostLoad.{cpuJiffies, externalCores, hostSpeedMops, loadavg}
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -22,31 +13,7 @@ object Bench {
     // poisoned by exactly such a window — load ~10 from a co-tenant).
     val loadStart = loadavg()
     val speedStart = hostSpeedMops()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config(graft.sources.Tables.nanosAsLongKey, "true")
-      .config("spark.ui.enabled", "false")
-      // the listener bus renders an explain string per action even with
-      // the UI off; simple mode + a cap keeps that tax off the driver
-      // path (measured via JobProfile stack samples: Literal.toString /
-      // truncatedString frames during job gaps)
-      .config("spark.sql.ui.explainMode", "simple")
-      .config("spark.sql.maxPlanStringLength", "1024")
-      // A/B knob, default untouched — measured r11 on the heavy subset,
-      // interleaved runs: parallelismFirst=false (coalesce tiny reduce
-      // stages to advisory size, fewer tasks) lost BOTH rounds (12.7 vs
-      // 11.1 s, 10.7 vs 9.9 s): the tiny-task overhead it saves is
-      // smaller than the parallelism it gives up. AQE's default stands.
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_PARFIRST", "true"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // ADVICE r11: register graft functions at session bootstrap so a
-    // Column built while another (or no) session was active still
-    // resolves the graft_* kernels when analyzed against THIS session
-    graft.plans.GraftFunctions.register(spark)
+    val spark = LocalSession(cpus)
     // Untimed warmup: JIT/codegen/scheduler spin-up otherwise lands on
     // whichever query happens to run first and distorts its number.
     graft.sources.Tables.names.foreach { t =>

@@ -3,7 +3,6 @@ package graft
 import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 
 /** Per-job wall-time profiler for a registered query — the tool that
   * answers "where do a composed pipeline's seconds actually go" (the
@@ -23,29 +22,13 @@ object JobProfile {
       if (args.length > 1) args(1)
       else sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config(graft.sources.Tables.nanosAsLongKey, "true")
-      .config("spark.ui.enabled", "false")
-      // match Bench: without the cap, AQE's per-stage onUpdatePlan
-      // re-stringifies the whole plan and the profile charges the
-      // driver with work the benched session never does
-      .config("spark.sql.maxPlanStringLength", "1024")
     // A/B experiment hook: GRAFT_PROFILE_CONF="key=value;key=value"
-    sys.env.get("GRAFT_PROFILE_CONF").foreach {
-      _.split(';').filter(_.contains('=')).foreach { kv =>
+    val extra = sys.env.get("GRAFT_PROFILE_CONF").toSeq.flatMap(
+      _.split(';').filter(_.contains('=')).map { kv =>
         val Array(k, v) = kv.split("=", 2)
-        builder.config(k.trim, v.trim)
-      }
-    }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // ADVICE r11: register graft functions at session bootstrap so a
-    // Column built while another (or no) session was active still
-    // resolves the graft_* kernels when analyzed against THIS session
-    graft.plans.GraftFunctions.register(spark)
+        k.trim -> v.trim
+      })
+    val spark = LocalSession(cpus, extra)
     val q = SparkEntry.queries.getOrElse(name,
       sys.error(s"unknown query $name"))
 

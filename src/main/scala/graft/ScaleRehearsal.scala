@@ -38,18 +38,7 @@ object ScaleRehearsal {
       else Set("all")
     def on(leg: String): Boolean = legSel("all") || legSel(leg)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config(graft.sources.Tables.nanosAsLongKey, "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // ADVICE r11: register graft functions at session bootstrap so a
-    // Column built while another (or no) session was active still
-    // resolves the graft_* kernels when analyzed against THIS session
-    graft.plans.GraftFunctions.register(spark)
+    val spark = LocalSession(cpus)
 
     val docs0 = graft.sources.Tables.table(spark, sfDir, "documents")
     val blown = (0 until blowup).map { k =>
@@ -708,9 +697,8 @@ object ScaleRehearsal {
       ((System.nanoTime() - t0) / 1e9, a)
     }
     val copies = (0 until blowup).map(copy)
-    // both quantizer fits are once-per-index-generation work (the
-    // registry's memoized-fit discipline) — timed separately from the
-    // appends whose flatness is the claim under test
+    // both quantizer fits are once-per-index-generation work — timed
+    // separately from the appends whose flatness is the claim under test
     val (wFit, models) = timed {
       val coarse = Clustering.kmeansFit(copies(0), "vec_id", "embedding",
         k = 8, iters = 2)

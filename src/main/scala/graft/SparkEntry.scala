@@ -109,6 +109,16 @@ object SparkEntry {
     graft.queries.DqQueries.refOracles ++
     graft.queries.ProfilingQueries.oracles
 
+  /** The oracles whose SQL embeds a model fitted on `sfDir` (BPE merges,
+    * PQ and IVF-PQ codebooks) as literals. Each model is refitted here
+    * with the same fit its query runs, so the result depends only on
+    * (session, dir), not on which queries ran before. Verify merges this
+    * into `oracle_sql.json` beside [[oracleSql]].
+    */
+  def fittedOracleSql(spark: SparkSession, sfDir: String): Map[String, String] =
+    graft.queries.TextQueries.fittedOracles(spark, sfDir) ++
+      graft.queries.VectorQueries.fittedOracles(spark, sfDir)
+
   /** Queries that are BY DESIGN rows-only (no SQL oracle CAN exist):
     * inherently approximate surfaces — xxhash64-seeded sketches whose
     * exact candidate sets no independent engine replays — plus the

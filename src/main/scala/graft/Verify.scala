@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,24 +9,7 @@ object Verify {
     val Array(sfDir, outDir) = args.take(2)
     val subset = args.drop(2).toSet
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config(graft.sources.Tables.nanosAsLongKey, "true")
-      .config("spark.ui.enabled", "false")
-      // the listener bus renders an explain string per action even with
-      // the UI off; simple mode + a cap keeps that tax off the driver
-      // path (measured via JobProfile stack samples: Literal.toString /
-      // truncatedString frames during job gaps)
-      .config("spark.sql.ui.explainMode", "simple")
-      .config("spark.sql.maxPlanStringLength", "1024")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // ADVICE r11: register graft functions at session bootstrap so a
-    // Column built while another (or no) session was active still
-    // resolves the graft_* kernels when analyzed against THIS session
-    graft.plans.GraftFunctions.register(spark)
+    val spark = LocalSession(cpus)
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => subset.isEmpty || subset(name) }
@@ -50,7 +32,15 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
+    // a failed fit drops only its own oracles (those queries then show as
+    // missing an oracle), like a failed query above
+    val fitted =
+      try SparkEntry.fittedOracleSql(spark, sfDir)
+      catch { case e: Throwable =>
+        System.err.println(s"[verify] fitted oracles failed: ${e.getMessage}")
+        Map.empty[String, String]
+      }
+    val json = (SparkEntry.oracleSql ++ fitted)
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     // explicit by-design rows-only marker (SparkEntry.rowsOnly): these

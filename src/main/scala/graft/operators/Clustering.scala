@@ -87,20 +87,14 @@ object Clustering {
         round(col("__sim"), 4).as("sim"))
   }
 
-  /** Fit then assign — the one-call form the q_kmeans query uses.
-    * `fitted` short-circuits the fit (the per-dir memo the registry
-    * shares across q_kmeans / q_semdedup_kmeans / q_ann_ivf_md5 — the
-    * centroid table is pure data, the fit deterministic).
-    */
+  /** Fit then assign — the one-call form the q_kmeans query uses. */
   def kmeansFitAssign(
       df: DataFrame,
       idCol: String,
       vecCol: String,
       k: Int,
-      iters: Int,
-      fitted: Option[Array[Array[Double]]] = None): DataFrame =
-    assign(df, idCol, vecCol,
-      fitted.getOrElse(kmeansFit(df, idCol, vecCol, k, iters)))
+      iters: Int): DataFrame =
+    assign(df, idCol, vecCol, kmeansFit(df, idCol, vecCol, k, iters))
 
   /** SemDeDup over k-means cells (Abbas et al. 2023 shape): fit k
     * clusters, then within each cluster drop every point whose cosine to
@@ -123,10 +117,9 @@ object Clustering {
       k: Int,
       iters: Int,
       tau: Double,
-      maxClusterSize: Long = 100000L,
-      fitted: Option[Array[Array[Double]]] = None): DataFrame = {
+      maxClusterSize: Long = 100000L): DataFrame = {
     require(tau >= -1.0 && tau <= 1.0, s"tau out of [-1,1]: $tau")
-    val centroids = fitted.getOrElse(kmeansFit(df, idCol, vecCol, k, iters))
+    val centroids = kmeansFit(df, idCol, vecCol, k, iters)
     graft.plans.GraftFunctions.register(df.sparkSession)
     val e = df.filter(col(vecCol).isNotNull)
       .select(col(idCol).as("__id"),

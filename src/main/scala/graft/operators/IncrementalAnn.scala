@@ -79,8 +79,8 @@ object IncrementalAnn {
     * (deterministic) centroids. A half-state is detected and failed
     * actionably rather than silently refit.
     *
-    * `fitted` short-circuits the quantizer acquisition (the fitted-model
-    * memo discipline): at bootstrap it replaces the k-means fit; on a
+    * `fitted` short-circuits the quantizer acquisition: at bootstrap it
+    * replaces the k-means fit (a frozen quantizer trained elsewhere); on a
     * later append it replaces the sidecar read (two bounded collect jobs
     * a chained append-after-append caller otherwise pays per call). On a
     * non-bootstrap append the caller MUST pass the value a prior

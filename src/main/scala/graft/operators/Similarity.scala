@@ -265,36 +265,9 @@ object Similarity {
     * usual vector-index contract); duplicate ids yield duplicate rows here
     * and duplicate candidates downstream.
     */
-  /** [[ivfCells]]'s one-pass seed-cell centroid fit as PURE DATA —
-    * (cell, centroid) pairs, memoizable per fixture dir like the md5
-    * family's kmeans fit (round 13: q_ann_ivf re-ran this aggregate +
-    * collect every bench run). Null-vector-only seed cells are dropped
-    * here exactly as the inline fit does (their rows re-assign to the
-    * nearest surviving centroid).
-    */
-  def ivfCellsFit(df: DataFrame, idCol: String, vecCol: String,
-      nCells: Int = 16): Seq[(Long, Seq[Double])] = {
-    graft.plans.GraftFunctions.register(df.sparkSession)
-    fitCells(spreadIfNarrow(df)
-      .select(col(idCol), asDouble(col(vecCol)).as("__v"))
-      .withColumn("__seed_cell", pmod(xxhash64(col(idCol)), lit(nCells.toLong))))
-  }
-
-  private def fitCells(v: DataFrame): Seq[(Long, Seq[Double])] =
-    v.groupBy(col("__seed_cell").as("cell"))
-      .agg(expr("graft_vector_avg(__v)").as("centroid"))
-      .collect()
-      // a seed cell of only-null vectors averages to a null centroid —
-      // unusable as an assignment target, so it is dropped
-      .toIndexedSeq
-      .filter(r => !r.isNullAt(r.fieldIndex("centroid")))
-      .map(r => (r.getAs[Long]("cell"),
-        r.getAs[scala.collection.Seq[Double]]("centroid").toIndexedSeq))
-
   def ivfCells(df: DataFrame, idCol: String, vecCol: String,
       nCells: Int = 16, maxInlineDoubles: Long = 1L << 18,
-      persistInput: Boolean = true,
-      fitted: Option[Seq[(Long, Seq[Double])]] = None): DataFrame = {
+      persistInput: Boolean = true): DataFrame = {
     graft.plans.GraftFunctions.register(df.sparkSession)
     // the (id, vec) projection feeds the eager training aggregate AND the
     // assignment scan below — persist so the parquet scan + float→double
@@ -311,12 +284,16 @@ object Similarity {
       .withColumn("__seed_cell", pmod(xxhash64(col(idCol)), lit(nCells.toLong)))
     val v =
       if (persistInput) base.persist(StorageLevel.MEMORY_AND_DISK) else base
-    // `fitted` (the memoized [[ivfCellsFit]] result) skips the training
-    // aggregate + collect entirely — the md5 family's fitted-model
-    // discipline applied to the xxhash path (round 13): the seed-cell
-    // centroid table is pure data keyed by (fixture, nCells)
     val centroids: Seq[(Long, Seq[Double])] =
-      fitted.getOrElse(fitCells(v))
+      v.groupBy(col("__seed_cell").as("cell"))
+        .agg(expr("graft_vector_avg(__v)").as("centroid"))
+        .collect()
+        // a seed cell of only-null vectors averages to a null centroid —
+        // unusable as an assignment target, so it is dropped
+        .toIndexedSeq
+        .filter(r => !r.isNullAt(r.fieldIndex("centroid")))
+        .map(r => (r.getAs[Long]("cell"),
+          r.getAs[scala.collection.Seq[Double]]("centroid").toIndexedSeq))
     if (centroids.isEmpty) {
       // empty input: keep the schema contract (id, cell, __v)
       return v.select(col(idCol), lit(null).cast("bigint").as("cell"),
@@ -383,8 +360,7 @@ object Similarity {
     */
   def annIvf(df: DataFrame, idCol: String, vecCol: String,
       k: Int, nCells: Int = 16, maxCellSize: Int = 100000,
-      saltFactor: Int = 8,
-      fitted: Option[Seq[(Long, Seq[Double])]] = None): DataFrame = {
+      saltFactor: Int = 8): DataFrame = {
     require(saltFactor >= 1, s"saltFactor must be >= 1, got $saltFactor")
     // (id, cell, unit vector) is the IVF index itself, read three times
     // below (cap count + both self-join sides) — materialize it ONCE,
@@ -399,8 +375,7 @@ object Similarity {
     // recovery; the storage footprint matches what an index build would
     // materialize anyway. persistInput = false: materializing BOTH the
     // raw projection and this derived frame would hold the vectors twice.
-    val cells = ivfCells(df, idCol, vecCol, nCells, persistInput = false,
-      fitted = fitted)
+    val cells = ivfCells(df, idCol, vecCol, nCells, persistInput = false)
       .withColumn("__v", normalize(col("__v")))
       .localCheckpoint()
     val keptCells = cells.groupBy(col("cell"))
@@ -531,19 +506,18 @@ object Similarity {
     * Scale shape: the fit is the k·dim literal-table pass (corpus never
     * shuffles); assignment/probing are narrow kernel passes; the
     * candidate join is cell-keyed with `maxCellSize` failing closed on
-    * degenerate fits — against the fitted directory (`fittedCellCounts`,
-    * one memoized histogram pass at fit time) the gate is a driver-side
-    * isin filter, otherwise an inline count + broadcast join. At extreme
+    * degenerate fits — against a fitted directory (`fittedCellCounts`,
+    * counted once at fit time) the gate is a driver-side isin filter,
+    * otherwise an inline count + broadcast join. At extreme
     * per-cell skew prefer [[annIvf]]'s salted join.
     */
   /** The IVF index's inverted-list DIRECTORY: per-cell member counts under
     * the given centroids — the other half of a real IVF index alongside
     * the centroid table (list sizes are what a probe planner consults).
     * One narrow pass (assignment kernel → 8-ish-group count → bounded
-    * collect of ≤ nCells rows); fit-time callers memoize it with the
-    * centroids so [[annIvfMd5]]'s `maxCellSize` gate costs the QUERY
-    * nothing (the r12 verdict's "three overlapped single-task scans" —
-    * the third scan was exactly this histogram recomputed per query).
+    * collect of ≤ nCells rows); a caller that keeps it beside the
+    * centroids hands it to [[annIvfMd5]] as `fittedCellCounts`, so the
+    * `maxCellSize` gate costs each query nothing.
     */
   def ivfCellCounts(
       df: DataFrame,
@@ -610,8 +584,8 @@ object Similarity {
       call_function("graft_ivf_cells", col("__v"), lit(centStr)))
     val assigned = base.select(col(idCol).as("n_id"), col("__v").as("n_vec"),
       element_at(col("__cells"), 1).getField("c").as("cell"))
-    // maxCellSize gate: with a fitted directory (ivfCellCounts, memoized
-    // at fit time with the centroids) the kept-cell set is a DRIVER-side
+    // maxCellSize gate: with a fitted directory (ivfCellCounts, counted
+    // at fit time under the centroids) the kept-cell set is a DRIVER-side
     // constant — an isin filter (or nothing, when every cell fits), no
     // second corpus scan, no count aggregate, no broadcast build inside
     // the query. Without one, the histogram subtree runs inline as before.

@@ -561,7 +561,7 @@ object TextQueries {
     "q_pack_bpe" -> ((s, dir) => {
       import graft.operators.{Bpe, Packing}
       val counted = Bpe
-        .tokenize(t(s, dir, "documents"), "text", fittedMerges(s, dir))
+        .tokenize(t(s, dir, "documents"), "text", bpeFit(s, dir))
         .select(col("doc_id"),
           size(col("bpe_tokens")).cast("long").as("n_tokens"))
       Packing.packGreedy(counted, "doc_id", "n_tokens",
@@ -581,11 +581,11 @@ object TextQueries {
     "q_ppl_buckets" -> ((s, dir) =>
       graft.operators.UnigramLm.perplexityBucketsWith(
         t(s, dir, "documents"), "text", "doc_id",
-        uniLm(s, dir), sampleSize = 200, headPct = 30, midPct = 30)),
+        uniLmFit(s, dir), sampleSize = 200, headPct = 30, midPct = 30)),
 
     "q_unigram_nll" -> ((s, dir) => {
       graft.operators.UnigramLm.scoresWith(
-        t(s, dir, "documents"), "text", "doc_id", uniLm(s, dir))
+        t(s, dir, "documents"), "text", "doc_id", uniLmFit(s, dir))
     }),
 
     // ORACLED decontamination: documents split into train (doc_id%10≠0)
@@ -932,7 +932,7 @@ object TextQueries {
     "q_bpe_encode" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
       graft.operators.Bpe
-        .tokenize(docs, "text", fittedMerges(s, dir))
+        .tokenize(docs, "text", bpeFit(s, dir))
         .select(col("doc_id"),
           size(col("bpe_tokens")).cast("long").as("n_bpe"),
           element_at(col("bpe_tokens"), 1).as("first_tok"))
@@ -949,7 +949,7 @@ object TextQueries {
       val units = regexp_extract_all(lower(col("text")),
         lit("[a-z]+|[0-9]+|[^a-z0-9\\s]"), lit(0))
       graft.operators.Bpe
-        .tokenize(docs, "text", fittedMerges(s, dir))
+        .tokenize(docs, "text", bpeFit(s, dir))
         .filter(col("text").isNotNull)
         .select(col("lang"),
           size(col("bpe_tokens")).cast("long").as("nb"),
@@ -976,7 +976,7 @@ object TextQueries {
     "q_bpe_lossless" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
       graft.operators.Bpe
-        .tokenize(docs, "text", fittedMerges(s, dir))
+        .tokenize(docs, "text", bpeFit(s, dir))
         .select(col("doc_id"),
           when(col("text").isNull, lit(null).cast("string"))
             .otherwise(md5(concat_ws("", col("bpe_tokens"))))
@@ -1005,20 +1005,20 @@ object TextQueries {
     }),
 
     // Naive-Bayes lang classifier, ORACLED: fit on the labeled corpus
-    // (top-500 vocab, Laplace smoothing; memoized per dir — see nbModel),
+    // (top-500 vocab, Laplace smoothing),
     // predict every doc; DuckDB refits the same model relationally and
     // replays the rounded-score argmax with the same larger-label
     // tie-break.
     "q_nb_lang" -> ((s, dir) =>
       graft.operators.NaiveBayes.predict(
-        t(s, dir, "documents"), "text", "doc_id", nbModel(s, dir))),
+        t(s, dir, "documents"), "text", "doc_id", nbFit(s, dir))),
 
     // Interpolated bigram-LM scoring, ORACLED: DuckDB refits the same
     // top-1000 unigram + top-2000 bigram tables and replays the
     // λ·P(w2|w1) + (1−λ)·P(w2) interpolation per adjacent pair.
     "q_bigram_nll" -> ((s, dir) =>
       graft.operators.UnigramLm.bigramScoresWith(
-        t(s, dir, "documents"), "text", "doc_id", biLm(s, dir))),
+        t(s, dir, "documents"), "text", "doc_id", biLmFit(s, dir))),
 
     // Group-disjoint split, ORACLED: every row of a source lands on the
     // same side (the leakage-safe split — near-dups cluster within
@@ -1117,7 +1117,7 @@ object TextQueries {
     "q_shared_spans" -> ((s, dir) => {
       graft.operators.SpanDedup.sharedSpans(
         spanFixture(s, dir), "text", "doc_id",
-        l = 5, minSpan = 8, maxDf = 50, seeded = Some(spanSeeds(s, dir)))
+        l = 5, minSpan = 8, maxDf = 50)
     }),
 
     // Per-document contamination rollup of the same spans: longest span
@@ -1125,7 +1125,7 @@ object TextQueries {
     "q_span_contamination" -> ((s, dir) => {
       graft.operators.SpanDedup.spanContamination(
         spanFixture(s, dir), "text", "doc_id",
-        l = 5, minSpan = 8, maxDf = 50, seeded = Some(spanSeeds(s, dir)))
+        l = 5, minSpan = 8, maxDf = 50)
     }),
 
     // Span decontamination vs a broadcast eval set, ORACLED: eval rows
@@ -1328,7 +1328,7 @@ object TextQueries {
     "q_lr_quality" -> ((s, dir) =>
       graft.operators.QualityClassifier.scoreLabeled(
         t(s, dir, "documents"), "text", "doc_id",
-        col("lang") === "en", lrModel(s, dir))),
+        col("lang") === "en", lrFit(s, dir))),
 
     // ORACLED quality-ensemble vote — the keep/drop audit a curation
     // pipeline actually gates on, with per-rule attribution: gopher
@@ -1337,7 +1337,7 @@ object TextQueries {
     // constant-false — the corruption makes the leg discriminate), the
     // C4 page gate on a replayable 3-slice page (the q_line_dedup
     // substring trick — raw fixture text has no terminal punctuation),
-    // and the memoized LR classifier's 0.5-threshold prediction;
+    // and the fitted LR classifier's 0.5-threshold prediction;
     // keep = majority (2 of 3). Each leg is a narrow scan-side pass;
     // the joins exchange (id, flag) rows only. DuckDB replays all three
     // legs (the gopher metric block, the C4 line gate, the unrolled LR
@@ -1364,7 +1364,7 @@ object TextQueries {
           docs.select(col("doc_id"), page.as("text")), "text", "doc_id")
         .select(col("doc_id"), col("pass").as("v_c4"))
       val l = graft.operators.QualityClassifier.score(
-          docs, "text", "doc_id", lrModel(s, dir))
+          docs, "text", "doc_id", lrFit(s, dir))
         .select(col("doc_id"), col("pred").as("v_lr"))
       g.join(c, "doc_id").join(l, "doc_id")
         .select(col("doc_id"), col("v_gopher"), col("v_c4"), col("v_lr"),
@@ -1380,7 +1380,7 @@ object TextQueries {
       graft.operators.QualityClassifier.evaluate(
         graft.operators.QualityClassifier.scoreLabeled(
           t(s, dir, "documents"), "text", "doc_id",
-          col("lang") === "en", lrModel(s, dir)))),
+          col("lang") === "en", lrFit(s, dir)))),
 
     // Calibration curve under the same fit, ORACLED: per score decile
     // the doc count, exact-integer mean score, and empirical positive
@@ -1389,7 +1389,7 @@ object TextQueries {
       graft.operators.QualityClassifier.evaluateCalibration(
         graft.operators.QualityClassifier.scoreLabeled(
           t(s, dir, "documents"), "text", "doc_id",
-          col("lang") === "en", lrModel(s, dir)))),
+          col("lang") === "en", lrFit(s, dir)))),
 
     // C4 cleaning rules (Raffel et al. 2020), ORACLED byte-wise: the
     // fixture is single-line and punctuation-free, so the line structure
@@ -1593,93 +1593,28 @@ object TextQueries {
     }),
   )
 
-  /** One LR fit per (sfDir) per JVM, shared by the three classifier
-    * queries (round-8 verdict #3: each re-ran the identical deterministic
-    * 2-epoch fit — ~4 driver-collect jobs — before its own evaluation
-    * pass). The fitted Model is pure data (token→weight map + bias, no
-    * session references), and the fit is a deterministic function of the
-    * fixture dir + the config pinned here, so a JVM-wide dir-keyed memo
-    * is semantics-neutral: every query still scores/evaluates with its
-    * own distributed pass. A concurrent double-fit computes the same
-    * model twice — harmless.
-    */
-  private val lrFitCache = scala.collection.concurrent.TrieMap
-    .empty[String, graft.operators.QualityClassifier.Model]
-  private def lrModel(s: SparkSession, dir: String)
+  // The fitted models below are plain functions of the fixture dir and
+  // the parameters pinned here: every row that needs one fits it inside
+  // its own run ([[fittedOracles]] refits the BPE merges for its SQL).
+
+  private def lrFit(s: SparkSession, dir: String)
       : graft.operators.QualityClassifier.Model =
-    lrFitCache.getOrElseUpdate(dir,
-      graft.operators.QualityClassifier.fit(
-        t(s, dir, "documents"), "text", "doc_id",
-        col("lang") === "en", vocabSize = 32, iters = 2, lr = 0.5))
+    graft.operators.QualityClassifier.fit(
+      t(s, dir, "documents"), "text", "doc_id",
+      col("lang") === "en", vocabSize = 32, iters = 2, lr = 0.5)
 
-  /** The NB language-classifier fit, memoized per dir with the same
-    * contract (and honesty caveat) as [[lrModel]]: the model is plain
-    * literals, the fixture dirs are immutable, and q_nb_lang's repeat
-    * runs measure the SCORING path — the three fit collects run once.
-    */
-  private val nbFitCache = scala.collection.concurrent.TrieMap
-    .empty[String, graft.operators.NaiveBayes.Model]
-  private def nbModel(s: SparkSession, dir: String)
+  private def nbFit(s: SparkSession, dir: String)
       : graft.operators.NaiveBayes.Model =
-    nbFitCache.getOrElseUpdate(dir,
-      graft.operators.NaiveBayes.fit(
-        t(s, dir, "documents"), "text", "lang"))
+    graft.operators.NaiveBayes.fit(t(s, dir, "documents"), "text", "lang")
 
-  /** The unigram / interpolated-bigram LM fits, memoized per dir with
-    * the same contract (and measurement-honesty caveat) as [[lrModel]]
-    * and [[nbModel]]: the models are pure serialized score tables, the
-    * fits deterministic functions of the fixture dir + the registry
-    * params pinned here (vocab 1000 / bigrams 2000 / λ 0.7). The three
-    * LM queries (q_unigram_nll, q_bigram_nll, q_ppl_buckets) share the
-    * unigram fit; repeat runs measure the narrow codegen scoring path.
-    */
-  private val uniLmCache = scala.collection.concurrent.TrieMap
-    .empty[String, Option[graft.operators.UnigramLm.UniModel]]
-  private def uniLm(s: SparkSession, dir: String)
+  private def uniLmFit(s: SparkSession, dir: String)
       : Option[graft.operators.UnigramLm.UniModel] =
-    uniLmCache.getOrElseUpdate(dir,
-      graft.operators.UnigramLm.fitUnigram(
-        t(s, dir, "documents"), "text", vocabSize = 1000))
-  private val biLmCache = scala.collection.concurrent.TrieMap
-    .empty[String, Option[graft.operators.UnigramLm.BiModel]]
-  private def biLm(s: SparkSession, dir: String)
-      : Option[graft.operators.UnigramLm.BiModel] =
-    biLmCache.getOrElseUpdate(dir,
-      graft.operators.UnigramLm.fitBigram(
-        t(s, dir, "documents"), "text"))
+    graft.operators.UnigramLm.fitUnigram(
+      t(s, dir, "documents"), "text", vocabSize = 1000)
 
-  /** The checkpointed positioned-5-gram seed frame over the span fixture,
-    * memoized per (session, dir) — q_shared_spans and q_span_contamination
-    * run the SAME seed scan (tokenize + shingle every fixture doc) before
-    * their pair joins; sharing it tokenizes once. Unlike the literal model
-    * memos this holds a session-bound DataFrame, so the key includes the
-    * session identity and the map is bounded (8 entries, insertion-evict).
-    * Measurement honesty (same caveat as lrModel): repeat bench runs of
-    * the two span queries measure the df-cap + pair-join + island-window
-    * path; the seed scan runs once per session.
-    */
-  private val spanSeedCache =
-    new java.util.LinkedHashMap[(Int, String), DataFrame](8, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(Int, String), DataFrame]): Boolean =
-        size() > 8
-    }
-  private def spanSeeds(s: SparkSession, dir: String): DataFrame =
-    spanSeedCache.synchronized {
-      val key = (System.identityHashCode(s), dir)
-      var f = spanSeedCache.get(key)
-      // identity guard: identityHashCode can recur after GC, and a hit
-      // from a DIFFERENT (or stopped) session would hand out checkpoint
-      // blocks of a dead context — recompute unless it is the same live
-      // session object
-      if (f == null || !(f.sparkSession eq s) ||
-          s.sparkContext.isStopped) {
-        f = graft.operators.SpanDedup.seeds(
-          spanFixture(s, dir), "text", "doc_id", l = 5).localCheckpoint()
-        spanSeedCache.put(key, f)
-      }
-      f
-    }
+  private def biLmFit(s: SparkSession, dir: String)
+      : Option[graft.operators.UnigramLm.BiModel] =
+    graft.operators.UnigramLm.fitBigram(t(s, dir, "documents"), "text")
 
   /** The oracled md5 near-dup cluster chain (signatures k=8, 4 baked
     * bands, capped candidates, 0.8 set-Jaccard verify, component
@@ -1729,24 +1664,16 @@ object TextQueries {
           substring(col("text"), 41, 160).as("text")))
   }
 
-  /** One fit per (session, sf dir): q_bpe_encode and q_bpe_lossless share
-    * the learned table, and Verify runs both — refitting would double the
-    * (cheap but not free) word-count job. The fit is deterministic, so
-    * caching cannot change results.
-    */
-  private val mergeCache =
-    scala.collection.concurrent.TrieMap.empty[String, Seq[(String, String)]]
-  private def fittedMerges(s: SparkSession, dir: String): Seq[(String, String)] =
-    mergeCache.getOrElseUpdate(dir,
-      graft.operators.Bpe.fitMerges(t(s, dir, "documents"), "text",
-        numMerges = 200, vocabWords = 20000))
+  private def bpeFit(s: SparkSession, dir: String): Seq[(String, String)] =
+    graft.operators.Bpe.fitMerges(t(s, dir, "documents"), "text",
+      numMerges = 200, vocabWords = 20000)
 
-  /** The static oracles plus the fitted-model BPE replay (available once
-    * the fit has run — Verify executes every query BEFORE dumping oracle
-    * SQL, so the merge table is in [[mergeCache]] by then; evaluated cold
-    * the entry is simply absent and q_bpe_encode stays rows-only).
+  /** The oracles whose SQL embeds a fitted table as a literal: the BPE
+    * replays under the merges fitted on `dir`.
     */
-  def oracles: Map[String, String] = staticOracles ++ bpeFittedOracles
+  private[graft] def fittedOracles(s: SparkSession, dir: String)
+      : Map[String, String] =
+    bpeOracles(bpeFit(s, dir))
 
   /** DuckDB replay of the BPE APPLY under the fitted merge table: the
     * learned merges ship embedded as a list literal (rank = position);
@@ -1758,138 +1685,133 @@ object TextQueries {
     * higher and the best pair stays best until its occurrences are
     * exhausted — leftmost-first yields the identical final segmentation.
     */
-  private def bpeFittedOracles: Map[String, String] =
-    // exactly-one guard: with multiple fitted dirs in one JVM there is no
-    // way to know which one the dump is for — omit rather than guess
-    if (mergeCache.size != 1) Map.empty
+  private def bpeOracles(merges: Seq[(String, String)])
+      : Map[String, String] =
+    if (merges.isEmpty) Map.empty
     else {
-      val merges = mergeCache.values.head
-      if (merges.isEmpty) Map.empty
-      else {
-        def sq(s: String): String = s"'${s.replace("'", "''")}'"
-        val mergeList = merges.map { case (a, b) => sq(s"$a $b") }
-          .mkString("[", ", ", "]")
-        // shared recursive chain: merge-list literal, distinct words,
-        // leftmost-lowest-rank merge loop, final segmentation per word
-        val fitCtes =
-          s"""WITH RECURSIVE
-             ml AS (SELECT $mergeList AS l),
-             words AS (
-               SELECT DISTINCT unnest(regexp_extract_all(lower(text), '[a-z]+|[0-9]+|[^a-z0-9\\s]')) AS w
-               FROM documents WHERE text IS NOT NULL),
-             enc AS (
-               SELECT w, list_transform(range(1, len(w) + 1), i -> substr(w, i, 1)) AS ps, 0 AS step
-               FROM words
-               UNION ALL
-               SELECT w,
-                 list_concat(list_concat(list_slice(ps, 1, pos - 1), [ps[pos] || ps[pos + 1]]), list_slice(ps, pos + 2, len(ps))) AS ps,
-                 step + 1
+      def sq(s: String): String = s"'${s.replace("'", "''")}'"
+      val mergeList = merges.map { case (a, b) => sq(s"$a $b") }
+        .mkString("[", ", ", "]")
+      // shared recursive chain: merge-list literal, distinct words,
+      // leftmost-lowest-rank merge loop, final segmentation per word
+      val fitCtes =
+        s"""WITH RECURSIVE
+           ml AS (SELECT $mergeList AS l),
+           words AS (
+             SELECT DISTINCT unnest(regexp_extract_all(lower(text), '[a-z]+|[0-9]+|[^a-z0-9\\s]')) AS w
+             FROM documents WHERE text IS NOT NULL),
+           enc AS (
+             SELECT w, list_transform(range(1, len(w) + 1), i -> substr(w, i, 1)) AS ps, 0 AS step
+             FROM words
+             UNION ALL
+             SELECT w,
+               list_concat(list_concat(list_slice(ps, 1, pos - 1), [ps[pos] || ps[pos + 1]]), list_slice(ps, pos + 2, len(ps))) AS ps,
+               step + 1
+             FROM (
+               SELECT w, ps, step,
+                 list_aggregate(lr, 'min') AS bestrank,
+                 list_position(lr, list_aggregate(lr, 'min')) AS pos
                FROM (
-                 SELECT w, ps, step,
-                   list_aggregate(lr, 'min') AS bestrank,
-                   list_position(lr, list_aggregate(lr, 'min')) AS pos
-                 FROM (
-                   SELECT e.w AS w, e.ps AS ps, e.step AS step,
-                     list_transform(list_transform(range(1, len(e.ps)), j -> e.ps[j] || ' ' || e.ps[j + 1]), p -> list_position(ml.l, p)) AS lr
-                   FROM enc e, ml) t1) t2
-               WHERE bestrank IS NOT NULL),
-             fin AS (
-               SELECT w, ps FROM (
-                 SELECT w, ps, row_number() OVER (PARTITION BY w ORDER BY step DESC) AS rn
-                 FROM enc) WHERE rn = 1)"""
-        Map(
-          "q_bpe_encode" ->
-            s"""$fitCtes,
-             occ AS (
-               SELECT doc_id,
-                 unnest(regexp_extract_all(lower(text), '[a-z]+|[0-9]+|[^a-z0-9\\s]')) AS w,
-                 generate_subscripts(regexp_extract_all(lower(text), '[a-z]+|[0-9]+|[^a-z0-9\\s]'), 1) AS wpos
-               FROM documents WHERE text IS NOT NULL),
-             agg AS (
-               SELECT o.doc_id AS doc_id,
-                 CAST(sum(len(f.ps)) AS BIGINT) AS n_bpe,
-                 max(CASE WHEN o.wpos = 1 THEN f.ps[1] END) AS first_tok
-               FROM occ o JOIN fin f ON o.w = f.w
-               GROUP BY o.doc_id)
+                 SELECT e.w AS w, e.ps AS ps, e.step AS step,
+                   list_transform(list_transform(range(1, len(e.ps)), j -> e.ps[j] || ' ' || e.ps[j + 1]), p -> list_position(ml.l, p)) AS lr
+                 FROM enc e, ml) t1) t2
+             WHERE bestrank IS NOT NULL),
+           fin AS (
+             SELECT w, ps FROM (
+               SELECT w, ps, row_number() OVER (PARTITION BY w ORDER BY step DESC) AS rn
+               FROM enc) WHERE rn = 1)"""
+      Map(
+        "q_bpe_encode" ->
+          s"""$fitCtes,
+           occ AS (
+             SELECT doc_id,
+               unnest(regexp_extract_all(lower(text), '[a-z]+|[0-9]+|[^a-z0-9\\s]')) AS w,
+               generate_subscripts(regexp_extract_all(lower(text), '[a-z]+|[0-9]+|[^a-z0-9\\s]'), 1) AS wpos
+             FROM documents WHERE text IS NOT NULL),
+           agg AS (
+             SELECT o.doc_id AS doc_id,
+               CAST(sum(len(f.ps)) AS BIGINT) AS n_bpe,
+               max(CASE WHEN o.wpos = 1 THEN f.ps[1] END) AS first_tok
+             FROM occ o JOIN fin f ON o.w = f.w
+             GROUP BY o.doc_id)
+           SELECT d.doc_id,
+             CASE WHEN d.text IS NULL THEN NULL
+               ELSE coalesce(a.n_bpe, 0) END AS n_bpe,
+             a.first_tok
+           FROM documents d LEFT JOIN agg a USING (doc_id)""",
+        "q_bpe_fertility" ->
+          s"""$fitCtes,
+           occ AS (
+             SELECT doc_id,
+               unnest(regexp_extract_all(lower(text), '[a-z]+|[0-9]+|[^a-z0-9\\s]')) AS w
+             FROM documents WHERE text IS NOT NULL),
+           perdoc AS (
+             SELECT o.doc_id AS doc_id,
+               CAST(sum(len(f.ps)) AS BIGINT) AS n_bpe,
+               count(*) AS n_units,
+               CAST(sum(len(o.w)) AS BIGINT) AS n_chars
+             FROM occ o JOIN fin f ON o.w = f.w
+             GROUP BY o.doc_id),
+           j AS (
+             SELECT d.lang,
+               coalesce(p.n_bpe, 0) AS n_bpe,
+               coalesce(p.n_units, 0) AS n_units,
+               coalesce(p.n_chars, 0) AS n_chars
+             FROM documents d LEFT JOIN perdoc p USING (doc_id)
+             WHERE d.text IS NOT NULL)
+           SELECT lang,
+             count(*) AS n_docs,
+             CAST(sum(n_bpe) AS BIGINT) AS n_bpe,
+             CAST(sum(n_units) AS BIGINT) AS n_units,
+             CASE WHEN sum(n_units) = 0 THEN CAST(0 AS DOUBLE)
+               ELSE round(CAST(sum(n_bpe) AS DOUBLE)
+                 / CAST(sum(n_units) AS DOUBLE), 6) END AS fertility,
+             CASE WHEN sum(n_bpe) = 0 THEN CAST(0 AS DOUBLE)
+               ELSE round(CAST(sum(n_chars) AS DOUBLE)
+                 / CAST(sum(n_bpe) AS DOUBLE), 6) END AS chars_per_tok
+           FROM j GROUP BY lang""",
+        // BPE-counted greedy packing: the fitted segmentation supplies
+        // per-doc token counts (null text → 0, matching the operator's
+        // coalesce), then the same portable-draw recursive replay as
+        // the static q_pack_bins oracle at budget 4096.
+        "q_pack_bpe" ->
+          s"""$fitCtes,
+           poc AS (
+             SELECT doc_id,
+               unnest(regexp_extract_all(lower(text), '[a-z]+|[0-9]+|[^a-z0-9\\s]')) AS w
+             FROM documents WHERE text IS NOT NULL),
+           pnb AS (
+             SELECT o.doc_id AS doc_id,
+               CAST(sum(len(f.ps)) AS BIGINT) AS n_bpe
+             FROM poc o JOIN fin f ON o.w = f.w
+             GROUP BY o.doc_id),
+           pd AS (
              SELECT d.doc_id,
-               CASE WHEN d.text IS NULL THEN NULL
-                 ELSE coalesce(a.n_bpe, 0) END AS n_bpe,
-               a.first_tok
-             FROM documents d LEFT JOIN agg a USING (doc_id)""",
-          "q_bpe_fertility" ->
-            s"""$fitCtes,
-             occ AS (
-               SELECT doc_id,
-                 unnest(regexp_extract_all(lower(text), '[a-z]+|[0-9]+|[^a-z0-9\\s]')) AS w
-               FROM documents WHERE text IS NOT NULL),
-             perdoc AS (
-               SELECT o.doc_id AS doc_id,
-                 CAST(sum(len(f.ps)) AS BIGINT) AS n_bpe,
-                 count(*) AS n_units,
-                 CAST(sum(len(o.w)) AS BIGINT) AS n_chars
-               FROM occ o JOIN fin f ON o.w = f.w
-               GROUP BY o.doc_id),
-             j AS (
-               SELECT d.lang,
-                 coalesce(p.n_bpe, 0) AS n_bpe,
-                 coalesce(p.n_units, 0) AS n_units,
-                 coalesce(p.n_chars, 0) AS n_chars
-               FROM documents d LEFT JOIN perdoc p USING (doc_id)
-               WHERE d.text IS NOT NULL)
-             SELECT lang,
-               count(*) AS n_docs,
-               CAST(sum(n_bpe) AS BIGINT) AS n_bpe,
-               CAST(sum(n_units) AS BIGINT) AS n_units,
-               CASE WHEN sum(n_units) = 0 THEN CAST(0 AS DOUBLE)
-                 ELSE round(CAST(sum(n_bpe) AS DOUBLE)
-                   / CAST(sum(n_units) AS DOUBLE), 6) END AS fertility,
-               CASE WHEN sum(n_bpe) = 0 THEN CAST(0 AS DOUBLE)
-                 ELSE round(CAST(sum(n_chars) AS DOUBLE)
-                   / CAST(sum(n_bpe) AS DOUBLE), 6) END AS chars_per_tok
-             FROM j GROUP BY lang""",
-          // BPE-counted greedy packing: the fitted segmentation supplies
-          // per-doc token counts (null text → 0, matching the operator's
-          // coalesce), then the same portable-draw recursive replay as
-          // the static q_pack_bins oracle at budget 4096.
-          "q_pack_bpe" ->
-            s"""$fitCtes,
-             poc AS (
-               SELECT doc_id,
-                 unnest(regexp_extract_all(lower(text), '[a-z]+|[0-9]+|[^a-z0-9\\s]')) AS w
-               FROM documents WHERE text IS NOT NULL),
-             pnb AS (
-               SELECT o.doc_id AS doc_id,
-                 CAST(sum(len(f.ps)) AS BIGINT) AS n_bpe
-               FROM poc o JOIN fin f ON o.w = f.w
-               GROUP BY o.doc_id),
-             pd AS (
-               SELECT d.doc_id,
-                 CAST(('0x' || substr(md5(CAST(d.doc_id AS VARCHAR)), 1, 8))
-                   AS BIGINT) % 8 AS bucket,
-                 coalesce(p.n_bpe, 0) AS nt
-               FROM documents d LEFT JOIN pnb p USING (doc_id)),
-             po AS (
-               SELECT doc_id, bucket, nt,
-                 row_number() OVER (PARTITION BY bucket ORDER BY doc_id)
-                   AS rn
-               FROM pd),
-             pacc AS (
-               SELECT bucket, rn, doc_id, nt,
-                 CAST(0 AS BIGINT) AS bin, nt AS cur
-               FROM po WHERE rn = 1
-               UNION ALL
-               SELECT po.bucket, po.rn, po.doc_id, po.nt,
-                 CASE WHEN a.cur + po.nt > 4096 THEN a.bin + 1
-                   ELSE a.bin END,
-                 CASE WHEN a.cur + po.nt > 4096 THEN po.nt
-                   ELSE a.cur + po.nt END
-               FROM pacc a
-               JOIN po ON po.bucket = a.bucket AND po.rn = a.rn + 1)
-             SELECT bucket * 4294967296 + bin AS bin_id,
-               count(*) AS n_docs,
-               CAST(sum(nt) AS BIGINT) AS total_tokens
-             FROM pacc GROUP BY 1""")
-      }
+               CAST(('0x' || substr(md5(CAST(d.doc_id AS VARCHAR)), 1, 8))
+                 AS BIGINT) % 8 AS bucket,
+               coalesce(p.n_bpe, 0) AS nt
+             FROM documents d LEFT JOIN pnb p USING (doc_id)),
+           po AS (
+             SELECT doc_id, bucket, nt,
+               row_number() OVER (PARTITION BY bucket ORDER BY doc_id)
+                 AS rn
+             FROM pd),
+           pacc AS (
+             SELECT bucket, rn, doc_id, nt,
+               CAST(0 AS BIGINT) AS bin, nt AS cur
+             FROM po WHERE rn = 1
+             UNION ALL
+             SELECT po.bucket, po.rn, po.doc_id, po.nt,
+               CASE WHEN a.cur + po.nt > 4096 THEN a.bin + 1
+                 ELSE a.bin END,
+               CASE WHEN a.cur + po.nt > 4096 THEN po.nt
+                 ELSE a.cur + po.nt END
+             FROM pacc a
+             JOIN po ON po.bucket = a.bucket AND po.rn = a.rn + 1)
+           SELECT bucket * 4294967296 + bin AS bin_id,
+             count(*) AS n_docs,
+             CAST(sum(nt) AS BIGINT) AS total_tokens
+           FROM pacc GROUP BY 1""")
     }
 
   /** Shared CTE chain for the span oracles: the augmented fixture,
@@ -2271,7 +2193,7 @@ object TextQueries {
            FROM reach JOIN sym s2 ON s2.src = reach.id)
          SELECT id AS doc_id, min(r) AS component FROM reach GROUP BY id"""
 
-  private val staticOracles: Map[String, String] = Map(
+  val oracles: Map[String, String] = Map(
     "q_lr_quality" -> lrQualityOracle,
     "q_quality_vote" -> (lrFitCtes + qualityVoteCtes),
     "q_lr_auc" -> lrAucOracle,

@@ -52,8 +52,7 @@ object VectorQueries {
     // gate covers the whole iterative fit, not just the apply.
     "q_kmeans" -> ((s, dir) =>
       graft.operators.Clustering.kmeansFitAssign(
-        t(s, dir, "embeddings"), "vec_id", "embedding", k = 8, iters = 2,
-        fitted = Some(kmFitted(s, dir)))),
+        t(s, dir, "embeddings"), "vec_id", "embedding", k = 8, iters = 2)),
 
     // SemDeDup over the fitted k-means cells, ORACLED: within each
     // cluster, a point is dropped iff a lower-id point of the same
@@ -63,7 +62,7 @@ object VectorQueries {
     "q_semdedup_kmeans" -> ((s, dir) =>
       graft.operators.Clustering.semDeDupKmeans(
         t(s, dir, "embeddings"), "vec_id", "embedding",
-        k = 8, iters = 2, tau = 0.2, fitted = Some(kmFitted(s, dir)))),
+        k = 8, iters = 2, tau = 0.2)),
 
     // Centroid similarity by label cluster: element-wise mean vector per
     // label via the VectorAvg TypedImperativeAggregate (map-side combined —
@@ -128,12 +127,8 @@ object VectorQueries {
     // path: trained coarse quantizer vs q_ann_lsh's data-independent
     // hyperplanes).
     "q_ann_ivf" -> ((s, dir) => {
-      // fitted seed-cell centroids memoized per dir (round 13): the
-      // one-pass fit aggregate + collect is index-build work, not
-      // steady-state query work — the md5 family's discipline applied
-      // to the xxhash path (rows-only, recall-floored in the rehearsal)
       Similarity.annIvf(t(s, dir, "embeddings"), "vec_id", "embedding",
-        k = 3, fitted = Some(ivfFitted(s, dir)))
+        k = 3)
         .groupBy(col("q_id"))
         .agg(count(lit(1)).as("n_candidates"), max(col("sim4")).as("best_sim"))
     }),
@@ -162,9 +157,7 @@ object VectorQueries {
     // xxhash q_ann_ivf stays the rows-only scale path).
     "q_ann_ivf_md5" -> ((s, dir) =>
       graft.operators.Similarity.annIvfMd5(
-        t(s, dir, "embeddings"), "vec_id", "embedding", k = 3,
-        fitted = Some(kmFitted(s, dir)),
-        fittedCellCounts = Some(kmCellCounts(s, dir)))),
+        t(s, dir, "embeddings"), "vec_id", "embedding", k = 3)),
 
     // ORACLED incremental ANN index chain (bootstrap -> append -> probe):
     // the continuous-ingest vector-index shape. Month 0 (vec_id % 4 != 0)
@@ -181,16 +174,11 @@ object VectorQueries {
       import graft.operators.IncrementalAnn
       val e = t(s, dir, "embeddings")
       IncrementalAnn.dropIndex(s, "iann_idx")
-      // the bootstrap fit is memoized per dir (the fitted-model
-      // discipline: deterministic pure data, index-BUILD work — its
-      // collect actions don't belong in the timed produce chain); the
-      // bootstrap still WRITES the sidecar, both appends still assign
-      // and write, the query still probes the persisted table
       // append returns the quantizer in force — chain it through the
       // second append and the query (each otherwise re-reads the
       // immutable sidecar: two bounded collect jobs per call)
       val cents = IncrementalAnn.append(e.filter(col("vec_id") % 4 =!= 0),
-        "vec_id", "embedding", "iann_idx", fitted = Some(iannFitted(s, dir)))
+        "vec_id", "embedding", "iann_idx", fitted = Some(iannFit(s, dir)))
       IncrementalAnn.append(e.filter(col("vec_id") % 4 === 0),
         "vec_id", "embedding", "iann_idx", fitted = Some(cents))
       IncrementalAnn.query(e, "vec_id", "embedding", "iann_idx", k = 3,
@@ -214,7 +202,7 @@ object VectorQueries {
       IncrementalAnn.dropIndex(s, "ianndel_idx")
       val cents = IncrementalAnn.append(e.filter(col("vec_id") % 4 =!= 0),
         "vec_id", "embedding", "ianndel_idx",
-        fitted = Some(iannFitted(s, dir)))
+        fitted = Some(iannFit(s, dir)))
       // month-1 append ∥ tombstone delete (optimization r17, guide §2.6
       // — overlap independent jobs): the append writes the bucketed
       // index table, the delete writes the tombstone sidecar; neither
@@ -246,7 +234,7 @@ object VectorQueries {
       IncrementalAnn.dropIndex(s, "iannc_idx")
       val cents = IncrementalAnn.append(e.filter(col("vec_id") % 4 =!= 0),
         "vec_id", "embedding", "iannc_idx",
-        fitted = Some(iannFitted(s, dir)))
+        fitted = Some(iannFit(s, dir)))
       // month-1 append ∥ tombstone delete — the q_ann_incr_del_md5
       // overlap (optimization r17, guide §2.6); compact() requires both
       // complete and sees the identical state.
@@ -276,7 +264,7 @@ object VectorQueries {
       val e = t(s, dir, "embeddings")
       IncrementalAnn.dropIndex(s, "iannq_idx")
       IncrementalAnn.append(e, "vec_id", "embedding", "iannq_idx",
-        fitted = Some(iannFitted(s, dir)))
+        fitted = Some(iannFit(s, dir)))
       s.conf.set(graft.plans.IndexTopK.EnabledKey, "true")
       s.conf.set(graft.plans.IndexTopK.NProbeKey, "2")
       s.table("iannq_idx")
@@ -298,7 +286,7 @@ object VectorQueries {
     "q_ann_drift" -> ((s, dir) => {
       import graft.operators.IncrementalAnn
       val e = t(s, dir, "embeddings")
-      val cents = iannFitted(s, dir)
+      val cents = iannFit(s, dir)
       val idx = IncrementalAnn.assign(e.filter(col("vec_id") % 4 =!= 0),
         "vec_id", "embedding", cents).select(col("cell"))
       IncrementalAnn.cellDrift(idx, e.filter(col("vec_id") % 4 === 0),
@@ -320,7 +308,7 @@ object VectorQueries {
       IncrementalAnn.dropIndex(s, "iannb_idx")
       IncrementalAnn.append(e.filter(col("vec_id") % 4 =!= 0),
         "vec_id", "embedding", "iannb_idx",
-        fitted = Some(iannFitted(s, dir)))
+        fitted = Some(iannFit(s, dir)))
       s.table("iannb_idx").select(col("cell"), col("id"))
     }),
 
@@ -336,7 +324,7 @@ object VectorQueries {
     "q_ann_policy" -> ((s, dir) => {
       import graft.operators.IncrementalAnn
       val e = t(s, dir, "embeddings")
-      val cents = iannFitted(s, dir)
+      val cents = iannFit(s, dir)
       val idx = IncrementalAnn.assign(e.filter(col("vec_id") % 4 =!= 0),
         "vec_id", "embedding", cents).select(col("cell"))
       val drift = IncrementalAnn.cellDrift(idx,
@@ -471,7 +459,7 @@ object VectorQueries {
     // contract, spec-pinned for determinism).
     "q_pq_codes" -> ((s, dir) =>
       graft.operators.Pq.encode(t(s, dir, "embeddings"), "vec_id",
-        "embedding", fittedPq(s, dir))),
+        "embedding", pqFit(s, dir))),
 
     // MMR diversified re-rank, ORACLED end to end: exact top-8
     // candidates per query, then three greedy maximal-marginal-relevance
@@ -490,7 +478,7 @@ object VectorQueries {
     "q_ann_pq" -> ((s, dir) => {
       val e = t(s, dir, "embeddings")
       graft.operators.Pq.annPq(e, e, "vec_id", "embedding",
-          fittedPq(s, dir), k = 3)
+          pqFit(s, dir), k = 3)
         .groupBy(col("q_id"))
         .agg(count(lit(1)).as("n_candidates"), max(col("adc4")).as("best_adc"))
     }),
@@ -505,7 +493,7 @@ object VectorQueries {
       val e = t(s, dir, "embeddings")
       graft.operators.Pq.annPq(
         e.filter(col("vec_id") % 40 === 0), e, "vec_id", "embedding",
-        fittedPq(s, dir), k = 3)
+        pqFit(s, dir), k = 3)
     }),
 
     // ORACLED IVF+PQ compound index content: coarse cell (the q_kmeans
@@ -513,9 +501,11 @@ object VectorQueries {
     // vector — the (cell, codes) row a 100 TB deployment persists instead
     // of raw vectors. DuckDB replays assign -> exact residual subtraction
     // -> rounded-cosine code argmax under the embedded fitted tables.
-    "q_ivfpq_codes" -> ((s, dir) =>
+    "q_ivfpq_codes" -> ((s, dir) => {
+      val (coarse, cbs) = ivfPqFit(s, dir)
       graft.operators.IvfPq.encode(t(s, dir, "embeddings"), "vec_id",
-        "embedding", kmFitted(s, dir), fittedIvfPq(s, dir))),
+        "embedding", coarse, cbs)
+    }),
 
     // ORACLED IVF+PQ ADC query chain (probe -> coarse term + residual LUT
     // fold -> top-k) on the q_ann_pq_md5 query subset: the FAISS-style
@@ -525,9 +515,10 @@ object VectorQueries {
     // ivfPqOracle constants.
     "q_ann_ivfpq_md5" -> ((s, dir) => {
       val e = t(s, dir, "embeddings")
+      val (coarse, cbs) = ivfPqFit(s, dir)
       graft.operators.IvfPq.annIvfPq(
         e.filter(col("vec_id") % 40 === 0), e, "vec_id", "embedding",
-        kmFitted(s, dir), fittedIvfPq(s, dir), k = 3, nProbe = 2)
+        coarse, cbs, k = 3, nProbe = 2)
     }),
 
     // ORACLED persisted compound chain (encode-once / query-many — the
@@ -541,7 +532,7 @@ object VectorQueries {
       import graft.operators.IvfPq
       val e = t(s, dir, "embeddings")
       IvfPq.dropPersisted(s, "ivfpq_idx")
-      val models = (kmFitted(s, dir), fittedIvfPq(s, dir))
+      val models = ivfPqFit(s, dir)
       IvfPq.persistIndex(e, "vec_id", "embedding", models._1,
         models._2, "ivfpq_idx")
       // models chained through the query (optimization r16 — the r13
@@ -563,9 +554,10 @@ object VectorQueries {
     // here must match the ivfPqRefineSql constants.
     "q_ann_ivfpq_refine_md5" -> ((s, dir) => {
       val e = t(s, dir, "embeddings")
+      val (coarse, cbs) = ivfPqFit(s, dir)
       graft.operators.IvfPq.annIvfPqRefined(
         e.filter(col("vec_id") % 40 === 0), e, "vec_id", "embedding",
-        kmFitted(s, dir), fittedIvfPq(s, dir), k = 3, c = 10, nProbe = 2)
+        coarse, cbs, k = 3, c = 10, nProbe = 2)
     }),
 
     // ORACLED incremental compound-index lifecycle (verdict r14 #1 — the
@@ -584,7 +576,7 @@ object VectorQueries {
       import graft.operators.IvfPq
       val e = t(s, dir, "embeddings")
       IvfPq.dropPersisted(s, "ivfpqi_idx")
-      val models = (iannFitted(s, dir), ivfPqIncrFitted(s, dir))
+      val models = ivfPqIncrFit(s, dir)
       IvfPq.persistIndex(e.filter(col("vec_id") % 4 =!= 0),
         "vec_id", "embedding", models._1, models._2, "ivfpqi_idx")
       IvfPq.appendPersisted(e.filter(col("vec_id") % 4 === 0),
@@ -607,7 +599,7 @@ object VectorQueries {
       import graft.operators.IvfPq
       val e = t(s, dir, "embeddings")
       IvfPq.dropPersisted(s, "ivfpqdel_idx")
-      val models = (iannFitted(s, dir), ivfPqIncrFitted(s, dir))
+      val models = ivfPqIncrFit(s, dir)
       IvfPq.persistIndex(e.filter(col("vec_id") % 4 =!= 0),
         "vec_id", "embedding", models._1, models._2, "ivfpqdel_idx")
       // month-1 append ∥ tombstone delete — the q_ann_incr_del_md5
@@ -637,7 +629,7 @@ object VectorQueries {
     "q_ivfpq_code_drift" -> ((s, dir) => {
       import graft.operators.IvfPq
       val e = t(s, dir, "embeddings")
-      val (coarse, cbs) = (iannFitted(s, dir), ivfPqIncrFitted(s, dir))
+      val (coarse, cbs) = ivfPqIncrFit(s, dir)
       IvfPq.codeDriftFrames(
         IvfPq.index(e.filter(col("vec_id") % 4 =!= 0), "vec_id",
           "embedding", coarse, cbs).select(col("codes")),
@@ -654,7 +646,7 @@ object VectorQueries {
     "q_ivfpq_policy" -> ((s, dir) => {
       import graft.operators.IvfPq
       val e = t(s, dir, "embeddings")
-      val (coarse, cbs) = (iannFitted(s, dir), ivfPqIncrFitted(s, dir))
+      val (coarse, cbs) = ivfPqIncrFit(s, dir)
       IvfPq.stalenessPolicy(IvfPq.codeDriftFrames(
         IvfPq.index(e.filter(col("vec_id") % 4 =!= 0), "vec_id",
           "embedding", coarse, cbs).select(col("codes")),
@@ -663,182 +655,135 @@ object VectorQueries {
     }),
   )
 
-  /** One PQ fit per sf dir (q_pq_codes and q_ann_pq share it; the fit is
-    * deterministic, so caching cannot change results).
-    */
-  /** The 8-cell / 2-round md5 k-means fit, memoized per dir with the
-    * lrModel/nbModel/fittedPq contract (pure centroid doubles,
-    * deterministic fit — q_kmeans, q_semdedup_kmeans and q_ann_ivf_md5
-    * share it; repeat runs measure assignment/probe/verify, the 3
-    * collect-action fit runs once per JVM per dir).
-    */
-  private val kmCache = scala.collection.concurrent.TrieMap
-    .empty[String, Array[Array[Double]]]
-  private def kmFitted(s: SparkSession, dir: String): Array[Array[Double]] =
-    kmCache.getOrElseUpdate(dir,
-      graft.operators.Clustering.kmeansFit(
-        t(s, dir, "embeddings"), "vec_id", "embedding", k = 8, iters = 2))
+  // The fitted models below are plain functions of the fixture dir:
+  // every row that needs one fits it inside its own run, and
+  // [[fittedOracles]] refits the same models for the oracle SQL. The
+  // fits are deterministic, so the query and its oracle see identical
+  // tables.
 
-  /** The IVF inverted-list directory (per-cell counts), memoized per dir
-    * WITH the centroids it was counted under — pure data, same contract as
-    * the centroid memo. Keeps annIvfMd5's maxCellSize gate out of the
-    * steady-state query (one histogram pass at fit time instead of a
-    * corpus scan + count agg + broadcast build per run).
-    */
-  private val ivfFitCache = scala.collection.concurrent.TrieMap
-    .empty[String, Seq[(Long, Seq[Double])]]
-  private def ivfFitted(s: SparkSession, dir: String): Seq[(Long, Seq[Double])] =
-    ivfFitCache.getOrElseUpdate(dir,
-      graft.operators.Similarity.ivfCellsFit(
-        t(s, dir, "embeddings"), "vec_id", "embedding", nCells = 16))
-
-  /** q_ann_incr_md5's BOOTSTRAP-slice k-means fit, memoized per dir with
-    * the kmFitted contract (pure centroid doubles, deterministic fit):
-    * repeat runs measure the assign/append/probe produce chain — the
-    * row's deliverable — not the quantizer training that a real system
-    * runs once per index generation.
-    */
-  /** The q_index_topk query vector (vec_id 0's embedding as doubles),
-    * memoized per dir — pure fixture data; repeat runs measure the
-    * rewritten scan, not a one-row collect.
-    */
-  private val qv0Cache = scala.collection.concurrent.TrieMap
-    .empty[String, Seq[Double]]
+  /** The q_index_topk query vector: vec_id 0's embedding as doubles. */
   private def qv0(s: SparkSession, dir: String): Seq[Double] =
-    qv0Cache.getOrElseUpdate(dir,
-      t(s, dir, "embeddings").filter(col("vec_id") === 0)
-        .select(asDouble(col("embedding")))
-        .head.getSeq[Double](0))
+    t(s, dir, "embeddings").filter(col("vec_id") === 0)
+      .select(asDouble(col("embedding")))
+      .head.getSeq[Double](0)
 
-  private val iannCache = scala.collection.concurrent.TrieMap
-    .empty[String, Array[Array[Double]]]
-  private def iannFitted(s: SparkSession, dir: String): Array[Array[Double]] =
-    iannCache.getOrElseUpdate(dir,
-      graft.operators.Clustering.kmeansFit(
-        t(s, dir, "embeddings").filter(col("vec_id") % 4 =!= 0),
-        "vec_id", "embedding", k = 8, iters = 2))
-
-  private val kmCellCache = scala.collection.concurrent.TrieMap
-    .empty[String, Map[Long, Long]]
-  private def kmCellCounts(s: SparkSession, dir: String): Map[Long, Long] =
-    kmCellCache.getOrElseUpdate(dir,
-      graft.operators.Similarity.ivfCellCounts(
-        t(s, dir, "embeddings"), "vec_id", "embedding", kmFitted(s, dir)))
-
-  private val pqCache = scala.collection.concurrent.TrieMap
-    .empty[String, Array[Array[Array[Double]]]]
-  private def fittedPq(s: SparkSession, dir: String): Array[Array[Array[Double]]] =
-    pqCache.getOrElseUpdate(dir,
-      graft.operators.Pq.fit(t(s, dir, "embeddings"), "vec_id", "embedding",
-        m = 4, k = 8, iters = 2))
-
-  /** Residual-PQ codebooks under the q_kmeans coarse centroids, memoized
-    * per dir with the fittedPq contract (pure codebook doubles,
-    * deterministic fit — quantizer training is once-per-index-generation
-    * work; repeat runs measure encode/probe/ADC).
+  /** The 8-cell / 2-round md5 k-means fit over the bootstrap slice
+    * (vec_id % 4 != 0): the frozen quantizer of the incremental families.
     */
-  private val ivfPqCache = scala.collection.concurrent.TrieMap
-    .empty[String, Array[Array[Array[Double]]]]
-  private def fittedIvfPq(
-      s: SparkSession, dir: String): Array[Array[Array[Double]]] =
-    ivfPqCache.getOrElseUpdate(dir,
-      graft.operators.IvfPq.fit(t(s, dir, "embeddings"), "vec_id",
-        "embedding", kmFitted(s, dir), m = 4, k = 8, iters = 2))
+  private def iannFit(s: SparkSession, dir: String): Array[Array[Double]] =
+    graft.operators.Clustering.kmeansFit(
+      t(s, dir, "embeddings").filter(col("vec_id") % 4 =!= 0),
+      "vec_id", "embedding", k = 8, iters = 2)
 
-  /** The incremental compound family's BOOTSTRAP-slice residual
-    * codebooks, fitted under the iannFitted coarse centroids (the same
-    * frozen-quantizer month-0 contract as q_ann_incr_md5), memoized per
-    * dir with the fittedIvfPq contract — quantizer training is
-    * once-per-index-generation work; repeat runs measure the persist/
-    * append/query produce chain, the rows' deliverable.
+  private def pqFit(s: SparkSession, dir: String): Array[Array[Array[Double]]] =
+    graft.operators.Pq.fit(t(s, dir, "embeddings"), "vec_id", "embedding",
+      m = 4, k = 8, iters = 2)
+
+  /** (coarse centroids, residual-PQ codebooks) over the whole corpus: the
+    * q_kmeans fit, then the codebooks under it.
     */
-  private val ivfPqIncrCache = scala.collection.concurrent.TrieMap
-    .empty[String, Array[Array[Array[Double]]]]
-  private def ivfPqIncrFitted(
-      s: SparkSession, dir: String): Array[Array[Array[Double]]] =
-    ivfPqIncrCache.getOrElseUpdate(dir,
-      graft.operators.IvfPq.fit(
-        t(s, dir, "embeddings").filter(col("vec_id") % 4 =!= 0),
-        "vec_id", "embedding", iannFitted(s, dir), m = 4, k = 8,
-        iters = 2))
+  private def ivfPqFit(s: SparkSession, dir: String)
+      : (Array[Array[Double]], Array[Array[Array[Double]]]) = {
+    val e = t(s, dir, "embeddings")
+    val coarse = graft.operators.Clustering.kmeansFit(
+      e, "vec_id", "embedding", k = 8, iters = 2)
+    (coarse, graft.operators.IvfPq.fit(e, "vec_id", "embedding", coarse,
+      m = 4, k = 8, iters = 2))
+  }
 
-  /** DuckDB replay of the PQ ENCODE under the fitted codebooks (available
-    * once the fit has run — Verify executes every query before dumping
-    * oracle SQL). Centroid components are 6-decimal-rounded doubles, so
+  /** The incremental compound family's bootstrap-slice models: the
+    * [[iannFit]] coarse centroids and the residual codebooks under them.
+    */
+  private def ivfPqIncrFit(s: SparkSession, dir: String)
+      : (Array[Array[Double]], Array[Array[Array[Double]]]) = {
+    val coarse = iannFit(s, dir)
+    (coarse, graft.operators.IvfPq.fit(
+      t(s, dir, "embeddings").filter(col("vec_id") % 4 =!= 0),
+      "vec_id", "embedding", coarse, m = 4, k = 8, iters = 2))
+  }
+
+  /** The oracles whose SQL embeds fitted tables as literals: the PQ,
+    * IVF-PQ and incremental IVF-PQ replays under the models fitted on
+    * `dir`.
+    */
+  private[graft] def fittedOracles(s: SparkSession, dir: String)
+      : Map[String, String] =
+    pqOracle(pqFit(s, dir)) ++ ivfPqOracle(ivfPqFit(s, dir)) ++
+      ivfPqIncrOracle(ivfPqIncrFit(s, dir))
+
+  /** DuckDB replay of the PQ ENCODE under the fitted codebooks `cents`.
+    * Centroid components are 6-decimal-rounded doubles, so
     * the literals round-trip exactly; the argmax replays the rounded
     * cosine with the smaller-code tie-break.
     */
-  private def pqOracle: Map[String, String] =
-    if (pqCache.size != 1) Map.empty
-    else {
-      val cents = pqCache.values.head
-      val m = cents.length
-      val sub = cents.head.head.length
-      val rows = for {
-        j <- cents.indices
-        c <- cents(j).indices
-      } yield s"($j, $c, CAST(${cents(j)(c).mkString("[", ", ", "]")} AS DOUBLE[]))"
-      // shared by both replays: the fitted-codebook literal table and
-      // the per-(vector, subspace) code argmax
-      val codesCtes =
-        s"""WITH e AS (
-             SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-             FROM embeddings WHERE embedding IS NOT NULL),
-           cent(j, c, cv) AS (VALUES ${rows.mkString(",\n             ")}),
-           sub AS (
-             SELECT vec_id, j, list_slice(v, j * $sub + 1, j * $sub + $sub) AS sv
-             FROM e CROSS JOIN (SELECT unnest(range($m)) AS j)),
-           scored AS (
-             SELECT vec_id, j, c,
-               round(list_cosine_similarity(sv, cv), 6) AS s
-             FROM sub JOIN cent USING (j)),
-           ranked AS (
-             SELECT vec_id, j, c,
-               row_number() OVER (PARTITION BY vec_id, j
-                 ORDER BY s DESC, c) AS r
-             FROM scored)"""
-      // the ADC fold replays Spark's fixed left-to-right sum order:
-      // ((l0 + l1) + l2) + ... — the LUT terms are 6-decimal-rounded on
-      // both engines, so the fold inputs are bit-identical
-      val pivots = (0 until m).map(j =>
-        s"max(CASE WHEN l.j = $j THEN l.l END) AS l$j").mkString(",\n             ")
-      val fold = (1 until m).foldLeft("l0")((acc, j) => s"($acc + l$j)")
-      Map(
-        "q_pq_codes" ->
-          s"""$codesCtes
-           SELECT vec_id, CAST(j AS BIGINT) AS subspace, CAST(c AS BIGINT) AS code
-           FROM ranked WHERE r = 1""",
-        "q_ann_pq_md5" ->
-          s"""$codesCtes,
-           codes AS (
-             SELECT vec_id AS n_id, j, c AS code FROM ranked WHERE r = 1),
-           q AS (
-             SELECT vec_id AS q_id, v AS qv FROM e WHERE vec_id % 40 = 0),
-           lut AS (
-             SELECT q_id, j, c,
-               round(list_dot_product(
-                 list_slice(qv, j * $sub + 1, j * $sub + $sub), cv), 6) AS l
-             FROM q CROSS JOIN cent),
-           pv AS (
-             SELECT l.q_id, d.n_id,
-             $pivots
-             FROM codes d JOIN lut l ON l.j = d.j AND l.c = d.code
-             WHERE d.n_id <> l.q_id
-             GROUP BY l.q_id, d.n_id),
-           adc AS (
-             SELECT q_id, n_id, round($fold, 4) AS adc4 FROM pv)
-           SELECT q_id, n_id, adc4, rn FROM (
-             SELECT q_id, n_id, adc4,
-               CAST(row_number() OVER (PARTITION BY q_id
-                 ORDER BY adc4 DESC, n_id) AS BIGINT) AS rn
-             FROM adc)
-           WHERE rn <= 3""")
-    }
+  private def pqOracle(cents: Array[Array[Array[Double]]])
+      : Map[String, String] = {
+    val m = cents.length
+    val sub = cents.head.head.length
+    val rows = for {
+      j <- cents.indices
+      c <- cents(j).indices
+    } yield s"($j, $c, CAST(${cents(j)(c).mkString("[", ", ", "]")} AS DOUBLE[]))"
+    // shared by both replays: the fitted-codebook literal table and
+    // the per-(vector, subspace) code argmax
+    val codesCtes =
+      s"""WITH e AS (
+           SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
+           FROM embeddings WHERE embedding IS NOT NULL),
+         cent(j, c, cv) AS (VALUES ${rows.mkString(",\n             ")}),
+         sub AS (
+           SELECT vec_id, j, list_slice(v, j * $sub + 1, j * $sub + $sub) AS sv
+           FROM e CROSS JOIN (SELECT unnest(range($m)) AS j)),
+         scored AS (
+           SELECT vec_id, j, c,
+             round(list_cosine_similarity(sv, cv), 6) AS s
+           FROM sub JOIN cent USING (j)),
+         ranked AS (
+           SELECT vec_id, j, c,
+             row_number() OVER (PARTITION BY vec_id, j
+               ORDER BY s DESC, c) AS r
+           FROM scored)"""
+    // the ADC fold replays Spark's fixed left-to-right sum order:
+    // ((l0 + l1) + l2) + ... — the LUT terms are 6-decimal-rounded on
+    // both engines, so the fold inputs are bit-identical
+    val pivots = (0 until m).map(j =>
+      s"max(CASE WHEN l.j = $j THEN l.l END) AS l$j").mkString(",\n             ")
+    val fold = (1 until m).foldLeft("l0")((acc, j) => s"($acc + l$j)")
+    Map(
+      "q_pq_codes" ->
+        s"""$codesCtes
+         SELECT vec_id, CAST(j AS BIGINT) AS subspace, CAST(c AS BIGINT) AS code
+         FROM ranked WHERE r = 1""",
+      "q_ann_pq_md5" ->
+        s"""$codesCtes,
+         codes AS (
+           SELECT vec_id AS n_id, j, c AS code FROM ranked WHERE r = 1),
+         q AS (
+           SELECT vec_id AS q_id, v AS qv FROM e WHERE vec_id % 40 = 0),
+         lut AS (
+           SELECT q_id, j, c,
+             round(list_dot_product(
+               list_slice(qv, j * $sub + 1, j * $sub + $sub), cv), 6) AS l
+           FROM q CROSS JOIN cent),
+         pv AS (
+           SELECT l.q_id, d.n_id,
+           $pivots
+           FROM codes d JOIN lut l ON l.j = d.j AND l.c = d.code
+           WHERE d.n_id <> l.q_id
+           GROUP BY l.q_id, d.n_id),
+         adc AS (
+           SELECT q_id, n_id, round($fold, 4) AS adc4 FROM pv)
+         SELECT q_id, n_id, adc4, rn FROM (
+           SELECT q_id, n_id, adc4,
+             CAST(row_number() OVER (PARTITION BY q_id
+               ORDER BY adc4 DESC, n_id) AS BIGINT) AS rn
+           FROM adc)
+         WHERE rn <= 3""")
+  }
 
   /** DuckDB replay of the IVF+PQ compound under fitted tables: coarse
-    * centroids AND residual codebooks embed as value-exact literals once
-    * the fits have run (the [[pqOracle]] contract — Verify executes every
-    * query before dumping oracle SQL). The chain: coarse argmax (round-6
+    * centroids AND residual codebooks embed as value-exact literals (the
+    * [[pqOracle]] contract). The chain: coarse argmax (round-6
     * cosine, smaller-cell ties — the q_ann_ivf_md5 assign contract),
     * EXACT element-wise residual subtraction (`list_transform` ≡
     * `graft_residual`, bit-identical doubles), the q_pq_codes rounded-
@@ -989,80 +934,78 @@ object VectorQueries {
          SELECT j, sum(n_index) AS ti, sum(n_batch) AS tb
          FROM jt GROUP BY j)"""
 
-  private def ivfPqOracle: Map[String, String] =
-    if (kmCache.size != 1 || ivfPqCache.size != 1) Map.empty
-    else {
-      val coarse = kmCache.values.head
-      val cents = ivfPqCache.values.head
-      // shared by q_ann_ivfpq_md5 AND q_ann_ivfpq_pers_md5: the persisted
-      // chain must reproduce the in-memory one exactly (through the
-      // sidecar round-trip and the pruned bucket scan), so ONE replay
-      // oracles both
-      val queryChainSql = ivfPqQueryChainSql(coarse, cents)
-      Map(
-        "q_ivfpq_codes" ->
-          s"""${ivfPqCtes(coarse, cents)}
-           SELECT vec_id, CAST(cell AS BIGINT) AS cell,
-             CAST(j AS BIGINT) AS subspace, CAST(c AS BIGINT) AS code
-           FROM ranked WHERE r = 1""",
-        "q_ann_ivfpq_md5" -> queryChainSql,
-        "q_ann_ivfpq_pers_md5" -> queryChainSql,
-        "q_ann_ivfpq_refine_md5" -> ivfPqRefineSql(coarse, cents,
-          c = 10, k = 3))
-    }
+  private def ivfPqOracle(
+      models: (Array[Array[Double]], Array[Array[Array[Double]]]))
+      : Map[String, String] = {
+    val (coarse, cents) = models
+    // shared by q_ann_ivfpq_md5 AND q_ann_ivfpq_pers_md5: the persisted
+    // chain must reproduce the in-memory one exactly (through the
+    // sidecar round-trip and the pruned bucket scan), so ONE replay
+    // oracles both
+    val queryChainSql = ivfPqQueryChainSql(coarse, cents)
+    Map(
+      "q_ivfpq_codes" ->
+        s"""${ivfPqCtes(coarse, cents)}
+         SELECT vec_id, CAST(cell AS BIGINT) AS cell,
+           CAST(j AS BIGINT) AS subspace, CAST(c AS BIGINT) AS code
+         FROM ranked WHERE r = 1""",
+      "q_ann_ivfpq_md5" -> queryChainSql,
+      "q_ann_ivfpq_pers_md5" -> queryChainSql,
+      "q_ann_ivfpq_refine_md5" -> ivfPqRefineSql(coarse, cents,
+        c = 10, k = 3))
+  }
 
   /** The incremental compound family's replays, under the BOOTSTRAP-slice
-    * models (iannFitted coarse + ivfPqIncrFitted codebooks — embedded as
-    * value-exact literals once the fits have run, the [[pqOracle]]
-    * contract). The produce row's oracle is the SAME query chain as the
-    * in-memory/persisted rows': bootstrap-persist + append + query must
-    * equal batch persistIndex over the union — sequential-composition
-    * parity, so one replay definition oracles the whole lifecycle.
+    * models ([[ivfPqIncrFit]] — embedded as value-exact literals, the
+    * [[pqOracle]] contract). The produce row's oracle is the SAME query
+    * chain as the in-memory/persisted rows': bootstrap-persist + append +
+    * query must equal batch persistIndex over the union — sequential-
+    * composition parity, so one replay definition oracles the whole
+    * lifecycle.
     */
-  private def ivfPqIncrOracle: Map[String, String] =
-    if (iannCache.size != 1 || ivfPqIncrCache.size != 1) Map.empty
-    else {
-      val coarse = iannCache.values.head
-      val cents = ivfPqIncrCache.values.head
-      val drift = ivfPqDriftCtes(coarse, cents)
-      Map(
-        "q_ann_ivfpq_incr_md5" -> ivfPqQueryChainSql(coarse, cents),
-        // the delete row's oracle: the SAME chain over the survivors only
-        // (delete + compact + query ≡ batch build over survivors under
-        // the same frozen models)
-        "q_ann_ivfpq_del_md5" -> ivfPqQueryChainSql(coarse, cents,
-          indexFilter = " AND vec_id % 10 != 3"),
-        "q_ivfpq_code_drift" ->
-          s"""$drift
-           SELECT CAST(jt.j AS BIGINT) AS subspace,
-             CAST(jt.c AS BIGINT) AS code,
-             CAST(n_index AS BIGINT) AS n_index,
-             CAST(n_batch AS BIGINT) AS n_batch,
-             round((greatest(n_index / ti, 1e-6)
+  private def ivfPqIncrOracle(
+      models: (Array[Array[Double]], Array[Array[Array[Double]]]))
+      : Map[String, String] = {
+    val (coarse, cents) = models
+    val drift = ivfPqDriftCtes(coarse, cents)
+    Map(
+      "q_ann_ivfpq_incr_md5" -> ivfPqQueryChainSql(coarse, cents),
+      // the delete row's oracle: the SAME chain over the survivors only
+      // (delete + compact + query ≡ batch build over survivors under
+      // the same frozen models)
+      "q_ann_ivfpq_del_md5" -> ivfPqQueryChainSql(coarse, cents,
+        indexFilter = " AND vec_id % 10 != 3"),
+      "q_ivfpq_code_drift" ->
+        s"""$drift
+         SELECT CAST(jt.j AS BIGINT) AS subspace,
+           CAST(jt.c AS BIGINT) AS code,
+           CAST(n_index AS BIGINT) AS n_index,
+           CAST(n_batch AS BIGINT) AS n_batch,
+           round((greatest(n_index / ti, 1e-6)
+               - greatest(n_batch / tb, 1e-6))
+             * ln(greatest(n_index / ti, 1e-6)
+               / greatest(n_batch / tb, 1e-6)), 6) AS psi6
+         FROM jt JOIN tt ON tt.j = jt.j""",
+      "q_ivfpq_policy" ->
+        s"""$drift,
+         per AS (
+           -- round-6 FIRST, then the exact micro conversion — the
+           -- q_ann_policy agreement point, per subspace
+           SELECT jt.j, sum(n_index) AS ti2, sum(n_batch) AS tb2,
+             sum(CAST(round(round((greatest(n_index / ti, 1e-6)
                  - greatest(n_batch / tb, 1e-6))
                * ln(greatest(n_index / ti, 1e-6)
-                 / greatest(n_batch / tb, 1e-6)), 6) AS psi6
-           FROM jt JOIN tt ON tt.j = jt.j""",
-        "q_ivfpq_policy" ->
-          s"""$drift,
-           per AS (
-             -- round-6 FIRST, then the exact micro conversion — the
-             -- q_ann_policy agreement point, per subspace
-             SELECT jt.j, sum(n_index) AS ti2, sum(n_batch) AS tb2,
-               sum(CAST(round(round((greatest(n_index / ti, 1e-6)
-                   - greatest(n_batch / tb, 1e-6))
-                 * ln(greatest(n_index / ti, 1e-6)
-                   / greatest(n_batch / tb, 1e-6)), 6) * 1e6) AS BIGINT))
-                 AS psi
-             FROM jt JOIN tt ON tt.j = jt.j GROUP BY jt.j)
-           SELECT CAST(count(*) AS BIGINT) AS m_subspaces,
-             CAST(max(ti2) AS BIGINT) AS n_index_rows,
-             CAST(max(tb2) AS BIGINT) AS n_batch_rows,
-             CAST(max(psi) AS BIGINT) AS max_psi_micro,
-             CAST(CASE WHEN max(psi) > 250000 THEN 1 ELSE 0 END AS BIGINT)
-               AS stale
-           FROM per""")
-    }
+                 / greatest(n_batch / tb, 1e-6)), 6) * 1e6) AS BIGINT))
+               AS psi
+           FROM jt JOIN tt ON tt.j = jt.j GROUP BY jt.j)
+         SELECT CAST(count(*) AS BIGINT) AS m_subspaces,
+           CAST(max(ti2) AS BIGINT) AS n_index_rows,
+           CAST(max(tb2) AS BIGINT) AS n_batch_rows,
+           CAST(max(psi) AS BIGINT) AS max_psi_micro,
+           CAST(CASE WHEN max(psi) > 250000 THEN 1 ELSE 0 END AS BIGINT)
+             AS stale
+         FROM per""")
+  }
 
   /** The k-means fit replay shared by q_kmeans and q_semdedup_kmeans:
     * md5-draw init (rank = cluster), two Lloyd rounds with 6-decimal
@@ -1172,9 +1115,6 @@ object VectorQueries {
              AS r
          FROM e CROSS JOIN c2)"""
 
-  def oracles: Map[String, String] =
-    staticOracles ++ pqOracle ++ ivfPqOracle ++ ivfPqIncrOracle
-
   /** One greedy MMR step as CTEs: score+rank the remaining pool, take
     * the winner, update the redundancy term for the rest.
     */
@@ -1227,7 +1167,7 @@ object VectorQueries {
        UNION ALL
        SELECT q_id, n_id, mmr6, CAST(3 AS BIGINT) AS rank FROM s3"""
 
-  private val staticOracles: Map[String, String] = Map(
+  val oracles: Map[String, String] = Map(
     "q_mmr_rerank" -> mmrOracle,
     "q_knn_brute" ->
       """SELECT vec_id, nbr_id, sim4, rn FROM (

@@ -66,7 +66,7 @@ object Tables {
     }
 
   /** Per-session frame map: access-ordered LRU bounded at
-    * [[MaxFramesPerSession]] (the spanSeedCache pattern), so when a
+    * [[MaxFramesPerSession]], so when a
     * session reads more than 64 (dir, table) pairs the LEAST-RECENTLY
     * USED analyzed plan is the one rebuilt on next use — not a
     * hash-arbitrary victim (ADVICE r10: the old TrieMap `headOption`

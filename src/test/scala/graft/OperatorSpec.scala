@@ -1527,7 +1527,7 @@ class OperatorSpec extends SparkSpec {
     // registry defaults: annLsh nBits=8, annIvf nCells=16 (VectorQueries)
     val lsh = pairs(Similarity.annLsh(e, "vec_id", "embedding", 3))
     val ivf = pairs(Similarity.annIvf(e, "vec_id", "embedding", 3))
-    // q_ann_pq's fit config: m=4, k=8, iters=2 (fittedPq)
+    // q_ann_pq's fit config: m=4, k=8, iters=2 (VectorQueries.pqFit)
     val pq = pairs(graft.operators.Pq.annPq(e, e, "vec_id", "embedding",
       graft.operators.Pq.fit(e, "vec_id", "embedding", m = 4, k = 8, iters = 2),
       k = 3))
