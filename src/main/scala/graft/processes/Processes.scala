@@ -1,6 +1,6 @@
 package graft.processes
 
-import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -21,16 +21,16 @@ object Processes {
 
   /** ParquetDump (ParquetDump.scala:115-126): canonical master dataset →
     * flattened export. The nested rewrite is one collapsed Project — a
-    * narrow, shuffle-free stage at any scale.
+    * narrow, shuffle-free stage at any scale — and the whole dump is ONE
+    * Spark job: the returned row count (the manifest's `Count`) is an
+    * `Observation` on the write, neither a second scan of the master
+    * dataset nor a read-back of the written files.
     */
   def parquetDump(records: DataFrame, outPath: String): Long = {
-    val flattened = flattenRecord(records)
-    flattened.write.mode(SaveMode.Overwrite).parquet(outPath)
-    // count the WRITTEN parquet, not the lineage: re-executing the
-    // flatten would scan the full master dataset a second time purely
-    // for the manifest count, while the footer-count over the written
-    // files is metadata-cheap (the TrainingPipeline.run convention)
-    records.sparkSession.read.parquet(outPath).count()
+    val n = Observation()
+    flattenRecord(records).observe(n, count(lit(1)).as("n"))
+      .write.mode(SaveMode.Overwrite).parquet(outPath)
+    n.get("n").asInstanceOf[Long]
   }
 
   /** The ParquetDump.modifyColumns rewrite (ParquetDump.scala:10-52) built

@@ -1,24 +1,33 @@
 package graft.sinks
 
-import org.apache.spark.sql.{Dataset, SaveMode, SparkSession}
-import org.apache.spark.storage.StorageLevel
+import org.apache.spark.sql.{Dataset, Observation, SaveMode, SparkSession}
+import org.apache.spark.sql.functions.{count, lit}
 
 /** Per-provider JSONL dumps + combined all-provider dump, gzipped
   * (reference JsonlDump.scala:16-87).
   *
   * Reference semantics kept:
   *  - records are opaque text lines, never parsed (JsonlDump.scala:24-28);
-  *  - each provider's lines are persisted DISK_ONLY and counted once, since
-  *    the data is consumed twice — own dump + all-dump (JsonlDump.scala:29-32);
-  *  - the all-dump is the n-way union (JsonlDump.scala:51);
   *  - a manifest records per-provider counts and the invariant
   *    Σ provider counts = all count (JsonlDump.scala:44-67).
   *
-  * Spark-first deltas: `Dataset[String]` instead of RDD[String] (same
-  * physical text scan, but unions stay in the optimized plan), Spark's
-  * native gzip text writer with SaveMode.Overwrite instead of hand-rolled
-  * S3 delete-then-write (H7). Writes are narrow — no shuffle anywhere; at
-  * 100 TB each provider dump streams scan→codec→files in one stage.
+  * Spark-first deltas:
+  *  - each output directory is ONE Spark job: every provider's count is an
+  *    `Observation` on its own gzip text write, not a persisted copy
+  *    counted by a separate action (the reference's DISK_ONLY persist +
+  *    count, JsonlDump.scala:29-32);
+  *  - the all-dump is one multi-path text scan over every provider's
+  *    snapshot, not an n-way union (JsonlDump.scala:51) — one relation to
+  *    analyse instead of n, and Spark packs its input into fewer, larger
+  *    splits (the same lines in fewer gzip parts);
+  *  - the n + 1 writes run as concurrent legs ([[graft.Concurrent.all]],
+  *    the all-dump first since it is the longest); the manifest is written
+  *    only after every leg succeeded, and the all-dump's observed count
+  *    must equal Σ provider counts;
+  *  - Spark's native gzip text writer with SaveMode.Overwrite instead of
+  *    hand-rolled S3 delete-then-write (H7). Writes are narrow — no
+  *    shuffle anywhere; at 100 TB each dump streams scan→codec→files in
+  *    one stage.
   *
   * OWNERSHIP: `outRoot` belongs exclusively to this dump (the reference's
   * prefix-clearing contract, JsonlDump.scala:44-50): every `*.jsonl`
@@ -36,8 +45,6 @@ object JsonlDump {
       providerPaths: Map[String, String],
       outRoot: String,
       timestamp: String): Result = {
-    import spark.implicits._
-
     if (providerPaths.isEmpty) {
       // a fresh/empty source root discovers zero providers — still a valid
       // (empty) dump with an auditable manifest, not a reduce() crash
@@ -53,23 +60,24 @@ object JsonlDump {
     require(!providerPaths.contains("all"),
       "provider name 'all' collides with the combined dump — rename the " +
         "source directory")
-    val perProvider: Map[String, Dataset[String]] = providerPaths.map {
-      case (provider, path) =>
-        provider -> spark.read.textFile(path).persist(StorageLevel.DISK_ONLY)
-    }
-    try {
+    val root = outRoot.stripSuffix("/")
+    val providers = providerPaths.keys.toSeq.sorted
 
-    val counts = perProvider.map { case (provider, ds) =>
-      ds.write.mode(SaveMode.Overwrite)
+    def write(lines: => Dataset[String], name: String): () => Long = () => {
+      val n = Observation()
+      lines.observe(n, count(lit(1)).as("n"))
+        .write.mode(SaveMode.Overwrite)
         .option("compression", "gzip")
-        .text(s"${outRoot.stripSuffix("/")}/$provider.jsonl")
-      provider -> ds.count()
+        .text(s"$root/$name.jsonl")
+      n.get("n").asInstanceOf[Long]
     }
-
-    val all = perProvider.values.reduce(_.union(_))
-    all.write.mode(SaveMode.Overwrite)
-      .option("compression", "gzip")
-      .text(s"${outRoot.stripSuffix("/")}/all.jsonl")
+    val total +: counts = graft.Concurrent.all(
+      write(spark.read.textFile(providers.map(providerPaths): _*), "all") +:
+        providers.map(p => write(spark.read.textFile(providerPaths(p)), p)))
+    val providerCounts = providers.zip(counts).toMap
+    require(total == counts.sum,
+      s"all.jsonl holds $total lines but the provider dumps hold " +
+        s"${counts.sum}: a snapshot changed during the dump")
 
     // SaveMode.Overwrite only clears the CURRENT providers' directories:
     // a provider that disappeared since the previous run into this root
@@ -79,7 +87,7 @@ object JsonlDump {
     // delete-then-write cleared the prefix; deleting the no-longer-
     // present provider dirs restores that contract.
     val hconf = spark.sparkContext.hadoopConfiguration
-    val rootPath = new org.apache.hadoop.fs.Path(outRoot.stripSuffix("/"))
+    val rootPath = new org.apache.hadoop.fs.Path(root)
     val fs = rootPath.getFileSystem(hconf)
     val live = providerPaths.keySet.map(_ + ".jsonl") + "all.jsonl"
     if (fs.exists(rootPath)) fs.listStatus(rootPath).foreach { st =>
@@ -88,20 +96,12 @@ object JsonlDump {
         fs.delete(st.getPath, true)
     }
 
-    val total = counts.values.sum
-    Manifest.write(
-      spark.sparkContext.hadoopConfiguration, outRoot,
-      counts.map { case (p, n) => s"Count.$p" -> n.toString } ++
+    Manifest.write(hconf, outRoot,
+      providerCounts.map { case (p, n) => s"Count.$p" -> n.toString } ++
         Map("Count.all" -> total.toString,
-          "Providers" -> providerPaths.keys.toSeq.sorted.mkString(",")),
+          "Providers" -> providers.mkString(",")),
       timestamp)
 
-    Result(outRoot, counts, total)
-    } finally {
-      // released on failure too (the CsvReport/Sitemap contract): a
-      // failed multi-provider dump must not leave the whole corpus
-      // pinned DISK_ONLY for the session lifetime
-      perProvider.values.foreach(_.unpersist())
-    }
+    Result(outRoot, providerCounts, total)
   }
 }

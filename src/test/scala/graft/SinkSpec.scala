@@ -165,6 +165,50 @@ class SinkSpec extends SparkSpec {
       .contains("Count.all: 0"))
   }
 
+  test("jsonl dump with an unreadable snapshot fails only after every leg has finished, and writes no manifest") {
+    import spark.implicits._
+    val src = tmpDir()
+    val good = Seq("p1", "p2", "p3")
+    good.foreach(p => Seq(s"""{"p":"$p"}""").toDS().write.text(s"$src/$p"))
+    // a truncated/corrupt gzip part: the codec fails inside the scan task
+    new java.io.File(s"$src/bad").mkdirs()
+    Files.write(new java.io.File(s"$src/bad/part-00000.jsonl.gz").toPath,
+      "not gzip at all".getBytes("UTF-8"))
+    val out = tmpDir()
+    val paths = (good :+ "bad").map(p => p -> s"$src/$p").toMap
+    intercept[Exception](JsonlDump.dump(spark, paths, out, "2026-10-01"))
+    // when the exception surfaces no leg is still writing detached
+    good.foreach(p => assert(new java.io.File(s"$out/$p.jsonl/_SUCCESS").exists(),
+      s"$p's dump had not committed when the failure surfaced"))
+    assert(!new java.io.File(s"$out/_MANIFEST").exists(),
+      "a failed dump must not write a manifest")
+  }
+
+  test("jsonl dump of empty providers completes with zero counts and Count.all = Σ") {
+    import spark.implicits._
+    val src = tmpDir()
+    Seq("""{"a":1}""", """{"a":2}""").toDS().write.text(s"$src/full")
+    // one snapshot that is a single empty file, one with no data file at all
+    new java.io.File(s"$src/emptyfile").mkdirs()
+    Files.write(new java.io.File(s"$src/emptyfile/part-00000.jsonl").toPath,
+      Array.emptyByteArray)
+    new java.io.File(s"$src/nofiles").mkdirs()
+    Files.write(new java.io.File(s"$src/nofiles/_SUCCESS").toPath,
+      Array.emptyByteArray)
+    val out = tmpDir()
+    val res = JsonlDump.dump(spark, Seq("full", "emptyfile", "nofiles")
+      .map(p => p -> s"$src/$p").toMap, out, "2026-10-01")
+    assert(res.providerCounts ===
+      Map("full" -> 2L, "emptyfile" -> 0L, "nofiles" -> 0L))
+    assert(res.totalCount === 2L)
+    val manifest = Manifest.read(spark.sparkContext.hadoopConfiguration, out)
+    Seq("Count.full: 2", "Count.emptyfile: 0", "Count.nofiles: 0",
+      "Count.all: 2").foreach(line =>
+      assert(manifest.linesIterator.contains(line), s"missing '$line'"))
+    assert(spark.read.text(s"$out/emptyfile.jsonl").count() === 0L)
+    assert(spark.read.text(s"$out/all.jsonl").count() === 2L)
+  }
+
   test("csv report writes one file with header and refuses huge frames") {
     import spark.implicits._
     val out = tmpDir()
@@ -470,6 +514,24 @@ class SinkSpec extends SparkSpec {
     assert(back.select("id").head().getString(0) === "zzz9")
     assert(back.select("uri").head().getString(0) === "http://dp.la/api/items/zzz9")
     assert(back.columns.contains("sourceResource"))
+  }
+
+  test("parquetDump of an empty canonical frame counts 0 and writes a readable export") {
+    import graft.schema.{DplaMap, SchemaAlign}
+    // zero partitions: the writer substitutes one empty dummy partition,
+    // so the count must still come from the observed write
+    val rec = spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
+      StructType(Seq(StructField("dplaUri", StringType))))
+    val canonical = SchemaAlign.alignToSchema(rec, DplaMap.record)
+    val out = tmpDir() + "/dump.parquet"
+    val n = graft.processes.Processes.parquetDump(canonical, out)
+    assert(n === 0L)
+    val hconf = spark.sparkContext.hadoopConfiguration
+    Manifest.write(hconf, out, Map("Count" -> n.toString), "2026-10-01")
+    assert(Manifest.read(hconf, out).linesIterator.contains("Count: 0"))
+    val back = spark.read.parquet(out)
+    assert(back.count() === 0L)
+    assert(back.columns.toSeq === DplaMap.exportRecord.fieldNames.toSeq)
   }
 
   test("monthly batch chain: parquet dump feeds mq + sitemap (the EMR step dataflow)") {
